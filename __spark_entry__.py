@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from kgspark import oracles
 from kgspark import synth
 from kgspark.align import align_mentions, align_regions, sentence_regions, token_table
-from kgspark.automaton import build_automaton
+from kgspark.automaton import FlatMatcher
 from kgspark.canonicalize import canonicalize, close_redirects, wikidata_properties
 from kgspark.dedup import (
     exact_duplicates,
@@ -76,7 +76,7 @@ def _automaton(spark: SparkSession):
     global _AUTOMATON
     if _AUTOMATON is None:
         forms = sorted({r[0] for r in synth.LEXICON_ROWS})
-        _AUTOMATON = spark.sparkContext.broadcast(build_automaton(forms))
+        _AUTOMATON = spark.sparkContext.broadcast(FlatMatcher(forms))
     return _AUTOMATON
 
 

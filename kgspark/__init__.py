@@ -3,7 +3,7 @@
 Re-expresses the capabilities of the PolMine/dbpedia reference (an R client
 for DBpedia Spotlight, see /root/reference) as an idiomatic Spark DataFrame
 pipeline: boilerplate-stripped HTML text extraction, overlap-preserving
-segmentation, Aho-Corasick surface-form spotting against a broadcast lexicon,
+segmentation, vectorized flat-matcher surface-form spotting over the lexicon,
 prior + context-overlap disambiguation (Spotlight's public scoring model:
 Mendes et al. 2011; Daiber et al. 2013), overlap detection/categorization/
 resolution, coarse entity-type mapping, redirect/sameAs canonicalization and
@@ -13,7 +13,7 @@ multimodal plumbing) such an engine needs at 100 TB.
 
 Design rules (enforced throughout):
 - DataFrame/Catalyst first; pandas/Arrow UDFs only where built-ins cannot
-  express the semantics (HTML extraction, segmentation math, automaton
+  express the semantics (HTML extraction, segmentation math, matcher
   spotting); never per-row Python UDFs.
 - Small dimensions (lexicon, redirects, sameAs, stopwords) are broadcast.
 - Heavy keys (head entities, giant documents) are salted / AQE-handled.

@@ -1,116 +1,54 @@
-"""Aho-Corasick multi-pattern matcher for surface-form spotting.
+"""Multi-pattern matcher for surface-form spotting.
 
 Native replacement for the mention-detection half of the DBpedia Spotlight
 service the reference delegates to over HTTP (``R/dbpedia.R:471-485``).
-Spotlight's spotter is a lexicon FSA (Mendes et al. 2011 §4.1); we build the
-same thing: a broadcast automaton over the ``surface_form`` column of the
-lexicon, applied inside a vectorized pandas UDF (see ``kgspark.spot``).
-
-Three implementations share the ``iter_matches`` contract:
-``FlatMatcher`` (the default — vectorized numpy per-length substring
-probes, compact byte tables that pickle/mmap cheaply, no per-character
-Python loop), the classic pure-Python ``AhoCorasick`` (the portable
-correctness reference the matcher is fuzz-tested against), and the
-optional ``pyahocorasick`` C adapter behind an import gate.
-Matches are emitted for *every* dictionary occurrence (including nested and
-overlapping ones); overlap resolution is a downstream, relational concern
-(``kgspark.overlaps``).
+Spotlight's spotter is a lexicon matcher (Mendes et al. 2011 §4.1); we build
+the same thing: a :class:`FlatMatcher` over the ``surface_form`` column of
+the lexicon (vectorized numpy per-length substring probes, compact byte
+tables that pickle/mmap cheaply, no per-character Python loop), applied to
+whole Arrow batches inside a pandas UDF (see ``kgspark.spot``).
+Matches are emitted for *every* word-bounded dictionary occurrence
+(including nested and overlapping ones); overlap resolution is a
+downstream, relational concern (``kgspark.overlaps``).
 """
 
 from __future__ import annotations
 
-from collections import deque
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable
 
 import numpy as np
-
-
-class AhoCorasick:
-    """Classic Aho-Corasick automaton over unicode code points.
-
-    ``iter_matches(text)`` yields ``(start0, pattern)`` for every occurrence
-    of every pattern, 0-based, in increasing end-position order.
-    """
-
-    __slots__ = ("goto", "fail", "out", "patterns")
-
-    def __init__(self, patterns: Iterable[str]):
-        self.patterns: list[str] = sorted(set(p for p in patterns if p))
-        self.goto: list[dict[str, int]] = [{}]
-        self.out: list[list[int]] = [[]]
-        for pid, pat in enumerate(self.patterns):
-            state = 0
-            for ch in pat:
-                nxt = self.goto[state].get(ch)
-                if nxt is None:
-                    self.goto.append({})
-                    self.out.append([])
-                    nxt = len(self.goto) - 1
-                    self.goto[state][ch] = nxt
-                state = nxt
-            self.out[state].append(pid)
-        # BFS failure links; merge output links so nested suffix patterns
-        # (e.g. "merge join" inside "sort merge join") are all reported.
-        self.fail = [0] * len(self.goto)
-        queue: deque[int] = deque()
-        for child in self.goto[0].values():
-            queue.append(child)
-        while queue:
-            state = queue.popleft()
-            for ch, child in self.goto[state].items():
-                queue.append(child)
-                f = self.fail[state]
-                while f and ch not in self.goto[f]:
-                    f = self.fail[f]
-                self.fail[child] = self.goto[f].get(ch, 0)
-                if self.fail[child] == child:
-                    self.fail[child] = 0
-                self.out[child] = self.out[child] + self.out[self.fail[child]]
-
-    def iter_matches(self, text: str) -> Iterator[tuple[int, str]]:
-        state = 0
-        goto, fail, out, patterns = self.goto, self.fail, self.out, self.patterns
-        for i, ch in enumerate(text):
-            while state and ch not in goto[state]:
-                state = fail[state]
-            state = goto[state].get(ch, 0)
-            if out[state]:
-                for pid in out[state]:
-                    pat = patterns[pid]
-                    yield (i - len(pat) + 1, pat)
 
 
 class FlatMatcher:
     """Vectorized multi-pattern matcher over numpy codepoint arrays.
 
-    Same match set as :class:`AhoCorasick` (every occurrence of every
-    pattern, nested and overlapping included), found by per-length exact
-    substring probes instead of a per-character Python state machine:
-    patterns are grouped by length L into sorted fixed-width byte tables
-    (UTF-32 code units, memcmp order), the text becomes one uint32 array,
-    and for each L every candidate start position is gathered into a
-    (starts, L) matrix and membership-tested against the table with one
-    ``searchsorted`` — no Python-level loop over characters.
+    Every word-bounded occurrence of every pattern (nested and overlapping
+    included) is found by per-length exact substring probes instead of a
+    per-character state machine: patterns are grouped by length L into
+    sorted fixed-width byte tables (UTF-32 code units, memcmp order), the
+    text becomes one uint32 array, and for each L every candidate start
+    position is gathered into a (starts, L) matrix and membership-tested
+    against the table with one ``searchsorted`` — no Python-level loop
+    over characters.
 
     Memory is the pattern bytes themselves (4 bytes/char, ~100 MB at 10^6
-    forms of ~20 chars) instead of the dict-of-dicts trie's ~1.7 GB, and
-    the build is string sorting + one encode per length group (seconds at
-    10^6 forms) instead of a 20 M-step Python trie insertion loop.
+    forms of ~20 chars), and the build is string sorting + one encode per
+    length group (seconds at 10^6 forms).
 
-    ``find_word_bounded_batch`` additionally restricts candidate starts to
-    ASCII word boundaries (the spotting contract) and processes a whole
-    Arrow batch of documents as one concatenated array, so the per-batch
-    numpy overhead is paid once, not per document.
+    Candidate starts and ends are restricted to ASCII word boundaries (the
+    spotting contract, mirrored by the DuckDB oracle's ``[0-9A-Za-z]``
+    class). ``find_word_bounded_batch`` processes a whole Arrow batch of
+    documents as one concatenated array, so the per-batch numpy overhead
+    is paid once, not per document.
     """
 
-    __slots__ = ("_patterns", "_tables", "_lengths", "_has_nul", "_max_len")
+    __slots__ = ("_tables", "_lengths", "_has_nul")
 
     # gather-matrix cap: bounds the (starts x L) uint32 scratch to ~128 MB
     _CHUNK = 1 << 19
 
     def __init__(self, patterns: Iterable[str]):
         pats = sorted(set(p for p in patterns if p))
-        self._patterns: list[str] | None = pats
         self._has_nul = any("\x00" in p for p in pats)
         by_len: dict[int, list[str]] = {}
         for p in pats:
@@ -126,32 +64,15 @@ class FlatMatcher:
             )
             self._tables[L] = (keys, firsts)
         self._lengths = sorted(self._tables)
-        self._max_len = self._lengths[-1] if self._lengths else 0
-
-    @property
-    def patterns(self) -> list[str]:
-        if self._patterns is None:  # compiled load — decode lazily
-            pats = []
-            for L in self._lengths:
-                keys, _ = self._tables[L]
-                raw = keys.tobytes()
-                pats.extend(
-                    raw[i * 4 * L : (i + 1) * 4 * L].decode("utf-32-le", "surrogatepass")
-                    for i in range(len(keys))
-                )
-            self._patterns = sorted(pats)
-        return self._patterns
 
     @classmethod
     def _from_tables(
         cls, tables: dict[int, tuple[np.ndarray, np.ndarray]], has_nul: bool
     ) -> "FlatMatcher":
         self = cls.__new__(cls)
-        self._patterns = None
         self._has_nul = has_nul
         self._tables = tables
         self._lengths = sorted(tables)
-        self._max_len = self._lengths[-1] if self._lengths else 0
         return self
 
     def save_compiled(self, directory: str) -> None:
@@ -191,24 +112,28 @@ class FlatMatcher:
         )
 
     @staticmethod
-    def _word_mask(T: np.ndarray) -> np.ndarray:
-        return (
+    def _word_starts(T: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(word-char mask, positions that start a word-bounded match)."""
+        word = (
             ((T >= 48) & (T <= 57))
             | ((T >= 65) & (T <= 90))
             | ((T >= 97) & (T <= 122))
         )
+        valid = np.empty(len(T), dtype=bool)
+        valid[0] = True
+        valid[1:] = ~word[:-1]
+        return word, np.nonzero(valid)[0]
 
     def _match_starts(
-        self, text: str, T: np.ndarray, starts_all: np.ndarray,
-        word: np.ndarray | None,
+        self, text: str, T: np.ndarray, starts_all: np.ndarray, word: np.ndarray
     ) -> list[tuple[int, str]]:
-        """All (start, pattern) hits whose start is in ``starts_all``;
-        ``word`` non-None additionally enforces the end boundary."""
+        """All (start, pattern) hits whose start is in ``starts_all`` and
+        whose end falls on a word boundary."""
         n = len(T)
         hits: list[tuple[int, str]] = []
         for L in self._lengths:
             keys_tab, firsts = self._tables[L]
-            starts = starts_all[starts_all + L <= n] if L > 0 else starts_all
+            starts = starts_all[starts_all + L <= n]
             if starts.size == 0:
                 continue
             # first-char prefilter: most positions cannot start any pattern
@@ -217,14 +142,10 @@ class FlatMatcher:
                 firsts[np.minimum(idx, len(firsts) - 1)] == T[starts]
             )
             starts = starts[ok]
+            e = starts + L
+            starts = starts[(e == n) | ~word[np.minimum(e, n - 1)]]
             if starts.size == 0:
                 continue
-            if word is not None:
-                e = starts + L
-                end_ok = (e == n) | ~word[np.minimum(e, n - 1)]
-                starts = starts[end_ok]
-                if starts.size == 0:
-                    continue
             for lo in range(0, starts.size, self._CHUNK):
                 chunk = starts[lo : lo + self._CHUNK]
                 sub = T[chunk[:, None] + np.arange(L, dtype=chunk.dtype)]
@@ -240,23 +161,14 @@ class FlatMatcher:
                     hits.append((s, text[s : s + L]))
         return hits
 
-    def iter_matches(self, text: str) -> Iterator[tuple[int, str]]:
-        """Every occurrence of every pattern (unfiltered), like
-        ``AhoCorasick.iter_matches`` — order is not guaranteed."""
-        T = self._codepoints(text)
-        starts_all = np.arange(len(T), dtype=np.int64)
-        yield from self._match_starts(text, T, starts_all, word=None)
-
     def find_word_bounded(self, text: str) -> list[tuple[int, str]]:
+        """All matches that start and end on an ASCII word boundary, as
+        0-based ``(start0, surface_form)`` sorted by ``(start0, len)``."""
         T = self._codepoints(text)
-        n = len(T)
-        if n == 0 or not self._lengths:
+        if len(T) == 0 or not self._lengths:
             return []
-        word = self._word_mask(T)
-        valid = np.empty(n, dtype=bool)
-        valid[0] = True
-        valid[1:] = ~word[:-1]
-        hits = self._match_starts(text, T, np.nonzero(valid)[0], word=word)
+        word, starts = self._word_starts(T)
+        hits = self._match_starts(text, T, starts, word)
         hits.sort(key=lambda h: (h[0], len(h[1]), h[1]))
         return hits
 
@@ -287,11 +199,8 @@ class FlatMatcher:
             np.cumsum(
                 [len(p) + 1 for p in parts[:-1]], out=doc_off[1:]
             )
-        word = self._word_mask(T)
-        valid = np.empty(n, dtype=bool)
-        valid[0] = True
-        valid[1:] = ~word[:-1]
-        hits = self._match_starts(big, T, np.nonzero(valid)[0], word=word)
+        word, starts = self._word_starts(T)
+        hits = self._match_starts(big, T, starts, word)
         for s, pat in hits:
             k = int(np.searchsorted(doc_off, s, side="right")) - 1
             out[k].append((s - int(doc_off[k]), pat))
@@ -300,89 +209,13 @@ class FlatMatcher:
         return out
 
 
-def _is_word_char(ch: str) -> bool:
-    # ASCII alnum boundary definition — mirrored exactly by the DuckDB
-    # oracle regex class [0-9A-Za-z] so both engines agree on boundaries.
-    return ("a" <= ch <= "z") or ("A" <= ch <= "Z") or ("0" <= ch <= "9")
-
-
-def find_word_bounded(automaton, text: str) -> list[tuple[int, str]]:
-    """All dictionary matches that start and end on a word boundary.
-
-    Spotlight spots token-aligned surface forms; we approximate token
-    alignment with ASCII word boundaries, which is deterministic and
-    SQL-mirrorable. Returns 0-based ``(start0, surface_form)`` sorted by
-    ``(start0, len)`` for reproducibility.
-    """
-    if isinstance(automaton, FlatMatcher):
-        return automaton.find_word_bounded(text)
-    n = len(text)
-    hits = []
-    for start0, pat in automaton.iter_matches(text):
-        end0 = start0 + len(pat)  # exclusive
-        if start0 > 0 and _is_word_char(text[start0 - 1]):
-            continue
-        if end0 < n and _is_word_char(text[end0]):
-            continue
-        hits.append((start0, pat))
-    hits.sort(key=lambda h: (h[0], len(h[1]), h[1]))
-    return hits
-
-
-class CAhoCorasick:
-    """pyahocorasick-backed adapter, same ``iter_matches`` contract.
-
-    The C trie builds ~100× faster and uses ~10× less memory than the
-    pure-Python automaton — at a 10⁶–10⁷-surface-form Spotlight lexicon
-    this is the difference between seconds and minutes per worker. Kept
-    behind the import gate because the container image has no compiler;
-    ``test_automaton.py::test_c_adapter_matches_pure`` exercises it
-    wherever the wheel is present.
-    """
-
-    __slots__ = ("_auto", "patterns")
-
-    def __init__(self, patterns: Iterable[str]):
-        import ahocorasick
-
-        self.patterns: list[str] = sorted(set(p for p in patterns if p))
-        self._auto = ahocorasick.Automaton()
-        for pat in self.patterns:
-            self._auto.add_word(pat, pat)
-        self._auto.make_automaton()
-
-    def iter_matches(self, text: str) -> Iterator[tuple[int, str]]:
-        for end_idx, pat in self._auto.iter(text):
-            yield (end_idx - len(pat) + 1, pat)
-
-
-def build_automaton(patterns: Iterable[str], prefer_c: bool = False):
-    """Build the spotting automaton.
-
-    Default is the vectorized :class:`FlatMatcher` — fastest build AND
-    scan of the three, and ~10x smaller than the pure-Python trie at
-    10^6 forms. ``prefer_c=True`` selects the pyahocorasick C trie when
-    the wheel is present (kept for parity testing; the flat matcher
-    outperforms it on batch scans because matching stays in numpy).
-    ``AhoCorasick`` remains the portable correctness reference."""
-    if prefer_c:
-        try:
-            import ahocorasick  # noqa: F401
-
-            return CAhoCorasick(patterns)
-        except ImportError:
-            pass
-    return FlatMatcher(patterns)
-
-
 # ---------------------------------------------------------------------------
-# Artifact path: build the automaton ON THE EXECUTORS from a parquet
-# artifact of surface forms, once per worker process, instead of
-# collect()-ing the lexicon to the driver and shipping a pickled automaton
-# through a broadcast. At a real Spotlight lexicon (10^6-10^7 forms) the
-# pickled pure-Python trie is GBs and the driver build takes minutes; the
-# artifact is ~100 MB of compressed parquet and each worker builds the trie
-# locally (C-speed with pyahocorasick), amortized by worker reuse.
+# Artifact path: build the matcher ON THE EXECUTORS from a parquet artifact
+# of surface forms, once per host, instead of collect()-ing the lexicon to
+# the Spark driver and shipping a pickled matcher through a broadcast. At a
+# real Spotlight lexicon (10^6-10^7 forms) the artifact is ~100 MB of
+# compressed parquet; the first worker compiles the flat tables (seconds
+# at 10^6 forms) and publishes them for its siblings to mmap.
 _PROCESS_CACHE: dict[str, object] = {}
 
 
@@ -478,6 +311,6 @@ def load_automaton_from_artifact(path: str):
                 except OSError:
                     pass
     if auto is None:
-        auto = build_automaton(_read_artifact_forms(path))
+        auto = FlatMatcher(_read_artifact_forms(path))
     _PROCESS_CACHE[path] = auto
     return auto

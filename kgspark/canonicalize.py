@@ -71,21 +71,6 @@ def write_closed_redirects(redirects: DataFrame, path: str, max_iter: int = 20) 
     closed.unpersist()
 
 
-def close_redirects_local(redirects: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Driver-side closure for notebook/tooling use on small dims. NOT on
-    the pipeline call graph (it collects)."""
-    edges = {r["src_uri"]: r["dst_uri"] for r in redirects.collect()}
-    closed = {}
-    for src in edges:
-        dst, hops = edges[src], 0
-        while dst in edges and hops < max_iter:
-            dst, hops = edges[dst], hops + 1
-        closed[src] = dst
-    return redirects.sparkSession.createDataFrame(
-        list(closed.items()), "src_uri string, dst_uri string"
-    )
-
-
 def canonicalize(
     mentions: DataFrame,
     redirects_closed: DataFrame,

@@ -16,15 +16,17 @@ whole-stage codegen):
 - score:        ``(1 + overlap) * prior``;
 - confidence:   per-mention normalized score ``score / sum(score)`` — the
                 emitted link must clear ``confidence`` (D5, default 0.35);
-- top-1:        ``row_number()`` over ``(doc_id, start, text)`` ordered by
-                ``(score desc, uri)`` — deterministic tiebreak (SURVEY §4);
-- types:        optional restriction ``arrays_overlap(dbpedia_types, wanted)``
-                (D6, server-side `types` param in the reference).
+- top-1:        ``min_by`` over the struct ``(-score, uri)`` per
+                ``(doc_id, start, text)`` — max score, deterministic min-uri
+                tiebreak (SURVEY §4), as a hash aggregation;
+- types:        re-attached from the broadcast lexicon after top-1; optional
+                restriction ``arrays_overlap(dbpedia_types, wanted)`` (D6,
+                server-side `types` param in the reference).
 
 Scale notes: the lexicon join is an explicit ``broadcast()``; the doc-token
 join is an equi-join on ``doc_id`` (AQE/skew-join handles head documents);
-the window partitions by ``(doc_id, start, text)`` which is already the
-join key's superset, so no extra shuffle beyond the doc join.
+the top-1 aggregation groups by ``(doc_id, start, text)``, a superset of
+the join key, so no extra shuffle beyond the doc join.
 """
 
 from __future__ import annotations
@@ -66,26 +68,21 @@ def generate_candidates(
     mentions: DataFrame,
     lexicon: DataFrame,
     min_support: int = 20,
-    slim: bool = True,
 ) -> DataFrame:
     """D2 + D3: equi-join mentions × broadcast lexicon, prominence filter.
 
-    ``slim=True`` (default) leaves the type arrays behind: they are
-    re-attached from the broadcast lexicon AFTER top-1 selection
-    (``disambiguate``), so candidate rows stay narrow through the scoring
-    shuffle — at 10^12 docs the per-candidate type arrays would otherwise
-    dominate the shuffle volume.
+    The type arrays stay behind: they are re-attached from the broadcast
+    lexicon AFTER top-1 selection (``disambiguate``), so candidate rows
+    stay narrow through the scoring shuffle — at 10^12 docs the
+    per-candidate type arrays would otherwise dominate the shuffle volume.
     """
-    cols = [
+    lex = F.broadcast(lexicon.select(
         F.col("surface_form"),
         F.col("uri"),
         F.col("prior"),
         F.col("support"),
         hashed_tokens(F.col("ctx_tokens"), " ").alias("ctx_arr"),
-    ]
-    if not slim:
-        cols[4:4] = [F.col("dbpedia_types"), F.col("wikidata_types")]
-    lex = F.broadcast(lexicon.select(*cols))
+    ))
     return (
         mentions.join(lex, mentions["text"] == lex["surface_form"], "inner")
         .filter(F.col("support") >= F.lit(min_support))
@@ -133,7 +130,8 @@ def disambiguate(
     doc_tokens_df: DataFrame | None = None,
     confidence: float = 0.35,
     types: list[str] | None = None,
-    lexicon: DataFrame | None = None,
+    *,
+    lexicon: DataFrame,
     partition_by_doc: bool = False,
     attach_type_cols: bool = True,
 ) -> DataFrame:
@@ -158,7 +156,7 @@ def disambiguate(
 
     Returns the annotation-table IR (R/dbpedia.R:447-453) with nested
     ``types`` map plus the per-KB pivots DBpedia_type / Wikidata_type
-    (P4/P5, R/dbpedia.R:560-600).
+    (P4/P5, R/dbpedia.R:560-600), the types re-attached from ``lexicon``.
     """
     if "doc_tokens" in candidates.columns:
         joined = candidates
@@ -182,13 +180,7 @@ def disambiguate(
     # map-side partial aggregation, and never materializes a per-mention
     # sort — the difference between one combine-friendly shuffle and a full
     # range sort at 10^12-doc scale.
-    slim = "dbpedia_types" not in candidates.columns
-    if slim and lexicon is None:
-        raise ValueError("slim candidates need the lexicon to re-attach types")
-    payload_cols = ["uri", "score"] if slim else [
-        "uri", "dbpedia_types", "wikidata_types", "score"
-    ]
-    payload = F.struct(*payload_cols)
+    payload = F.struct("uri", "score")
     order_key = F.struct((-F.col("score")).alias("s"), F.col("uri").alias("u"))
     grouped = scored.groupBy("doc_id", "start", "text").agg(
         F.min_by(payload, order_key).alias("best"),
@@ -197,23 +189,20 @@ def disambiguate(
     out = grouped.filter(
         (F.col("best.score") / F.col("score_sum")) >= F.lit(confidence)
     )
-    if slim and not attach_type_cols and not types:
+    if not attach_type_cols and not types:
         # narrow contract for the overlap chain: the caller re-attaches the
         # type payload after resolution (attach_types) so the window family
         # never sorts/shuffles it.
         return out.select(
             "doc_id", "start", "text", F.col("best.uri").alias("dbpedia_uri")
         )
-    if slim:
-        # re-attach types from the broadcast dim AFTER the winner is chosen:
-        # the scoring shuffle only ever carried (uri, score).
-        out = out.join(
-            F.broadcast(types_dim(lexicon)),
-            F.col("best.uri") == F.col("_t_uri"), "left",
-        ).drop("_t_uri")
-        dt, wt = F.col("dbpedia_types"), F.col("wikidata_types")
-    else:
-        dt, wt = F.col("best.dbpedia_types"), F.col("best.wikidata_types")
+    # re-attach types from the broadcast dim AFTER the winner is chosen:
+    # the scoring shuffle only ever carried (uri, score).
+    out = out.join(
+        F.broadcast(types_dim(lexicon)),
+        F.col("best.uri") == F.col("_t_uri"), "left",
+    ).drop("_t_uri")
+    dt, wt = F.col("dbpedia_types"), F.col("wikidata_types")
     if types:
         # D6: keep only entities carrying one of the wanted DBpedia types
         # (R/dbpedia.R:479-482).

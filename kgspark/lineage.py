@@ -64,10 +64,10 @@ def write_manifest(spark: SparkSession, path: str, manifest: dict) -> None:
 
 
 class StageRunner:
-    def __init__(self, spark: SparkSession, checkpoint_root: str | None, enabled: bool = True):
+    def __init__(self, spark: SparkSession, checkpoint_root: str | None):
         self.spark = spark
         self.root = checkpoint_root
-        self.enabled = enabled and checkpoint_root is not None
+        self.enabled = checkpoint_root is not None
         self.metrics: list[dict] = []
 
     def run(
@@ -75,20 +75,18 @@ class StageRunner:
         name: str,
         fn: Callable[[], DataFrame],
         version: str = "v1",
-        cache: bool = False,
     ) -> DataFrame:
         """Execute (or resume) one stage.
 
         Without a checkpoint root the stage stays lazy (pure plan
-        composition) — except ``cache=True`` stages, which persist in
-        memory because multiple downstream consumers would otherwise
-        recompute their lineage. With a checkpoint root, the stage output
-        is materialized to ``<root>/<name>`` and described in
-        ``_kg_manifest.json`` (which also cuts lineage).
+        composition). With a checkpoint root, the stage output is
+        materialized to ``<root>/<name>`` and described in
+        ``_kg_manifest.json`` (which also cuts lineage); a stage resumes
+        only from a manifest marked complete, so data without one is
+        recomputed.
         """
         if not self.enabled:
-            df = fn()
-            return df.persist() if cache else df
+            return fn()
         out_dir = self.root.rstrip("/") + "/" + name
         manifest_path = out_dir + "/" + MANIFEST_NAME
         manifest = read_manifest(self.spark, manifest_path)

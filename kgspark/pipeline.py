@@ -62,18 +62,6 @@ class PipelineConfig:
                                          # output of write_closed_redirects
                                          # (the production setup — closure is
                                          # an offline dim-build step)
-    partition_by_doc: bool = True        # explicit repartition(doc_id) before
-                                         # the top-1 agg so ONE exchange serves
-                                         # link + the overlap window family.
-                                         # A/B'd at the driver bench yardstick
-                                         # (local[32], 20k docs, warm pass +
-                                         # min-of-2, scripts/
-                                         # ab_partition_by_doc.py): one
-                                         # exchange 9.19 s vs two exchanges
-                                         # 11.56 s — the round-4 "regression"
-                                         # was host contention + cold python
-                                         # workers, not the plan (see
-                                         # BENCH/BASELINE.md A/B table).
 
 
 def run_pipeline(
@@ -170,9 +158,8 @@ def run_pipeline(
             confidence=cfg.confidence,
             types=cfg.types,
             # one doc-keyed exchange serves the top-1 agg AND the whole
-            # downstream overlap window family; A/B-confirmed at the driver
-            # yardstick — see PipelineConfig.partition_by_doc.
-            partition_by_doc=cfg.partition_by_doc,
+            # overlap window family (faster in both A/Bs, BENCH/AB_PARTITION.json)
+            partition_by_doc=True,
             # narrow rows through the cache + window family; the type
             # payload re-attaches once, post-resolution (attach_types) —
             # with a D6 type restriction the types must ride along for

@@ -2,12 +2,11 @@
 
 Native replacement for Spotlight's lexicon spotter (the mention-detection
 half of the black box the reference calls over HTTP,
-``R/dbpedia.R:471-485``; algorithm per Mendes et al. 2011 §4.1): a
-multi-pattern matcher over the lexicon's surface forms (the vectorized
-``FlatMatcher`` by default — numpy per-length substring probes, whole
-Arrow batch per call; the classic Aho-Corasick remains the reference
-implementation), applied in an Arrow-batched pandas UDF. Emits *all* word-bounded occurrences (nested and
-overlapping included) — overlap resolution is downstream and relational.
+``R/dbpedia.R:471-485``; algorithm per Mendes et al. 2011 §4.1): the
+vectorized ``FlatMatcher`` over the lexicon's surface forms (numpy
+per-length substring probes), applied to each whole Arrow batch in a
+pandas UDF. Emits *all* word-bounded occurrences (nested and overlapping
+included) — overlap resolution is downstream and relational.
 
 Offsets: the reference emits 1-based character starts (Spotlight's 0-based
 ``@offset`` plus the segment offset, default 1 — ``R/dbpedia.R:365,557``).
@@ -22,40 +21,30 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from kgspark.automaton import find_word_bounded, load_automaton_from_artifact
+from kgspark.automaton import load_automaton_from_artifact
 from kgspark.schemas import MENTIONS_ARRAY
 
 
 def make_spot_udf(source):
     """Build the spotting pandas UDF.
 
-    ``source`` is either a ``Broadcast[AhoCorasick]`` (small lexicons; the
-    pickled automaton rides the broadcast) or a ``str`` path to a surface-
-    form parquet artifact — then each python worker builds the automaton
-    locally once and caches it per-process (the 10⁶⁺-form scale path; see
-    kgspark.automaton.load_automaton_from_artifact).
+    ``source`` is either a ``Broadcast[FlatMatcher]`` (small lexicons; the
+    pickled matcher rides the broadcast) or a ``str`` path to a surface-
+    form parquet artifact — then the python workers load the matcher
+    compiled once per host and cache it per process (the 10⁶⁺-form scale
+    path; see kgspark.automaton.load_automaton_from_artifact). Either way
+    the whole Arrow batch is matched in one numpy pass.
     """
 
     by_path = isinstance(source, str)
 
     @pandas_udf(MENTIONS_ARRAY)
     def _spot(texts: pd.Series) -> pd.Series:
-        ac = load_automaton_from_artifact(source) if by_path else source.value
-
-        if hasattr(ac, "find_word_bounded_batch"):
-            # vectorized path: the whole Arrow batch is matched in one
-            # numpy pass (kgspark.automaton.FlatMatcher)
-            per_doc = ac.find_word_bounded_batch(texts.tolist())
-            return pd.Series(
-                [[{"off0": s, "sf": p} for s, p in hits] for hits in per_doc]
-            )
-
-        def one(t):
-            if t is None:
-                return []
-            return [{"off0": s, "sf": p} for s, p in find_word_bounded(ac, t)]
-
-        return texts.map(one)
+        matcher = load_automaton_from_artifact(source) if by_path else source.value
+        per_doc = matcher.find_word_bounded_batch(texts.tolist())
+        return pd.Series(
+            [[{"off0": s, "sf": p} for s, p in hits] for hits in per_doc]
+        )
 
     return _spot
 
@@ -87,12 +76,11 @@ def spot_documents(
     docs: DataFrame, automaton_src, doc_col: str = "url", text_col: str = "text"
 ) -> DataFrame:
     """Spot whole (un-segmented) documents; start is 1-based."""
-    spot = make_spot_udf(automaton_src)
-    return (
-        docs.withColumn("_m", F.explode(spot(F.col(text_col))))
-        .select(
-            F.col(doc_col).alias("doc_id"),
-            (F.col("_m.off0") + F.lit(1)).cast("long").alias("start"),
-            F.col("_m.sf").alias("text"),
-        )
+    return spot_segments(
+        docs.withColumn("_seg_off", F.lit(1)),
+        automaton_src,
+        doc_col=doc_col,
+        seg_text_col=text_col,
+        seg_off_col="_seg_off",
+        keep_extra=(),
     )

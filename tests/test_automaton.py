@@ -1,9 +1,9 @@
-"""Aho-Corasick correctness vs a brute-force scan (property-style)."""
+"""FlatMatcher correctness vs a brute-force scan (property-style)."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from kgspark.automaton import build_automaton, find_word_bounded
+from kgspark.automaton import FlatMatcher
 
 
 def brute_matches(patterns, text):
@@ -37,29 +37,37 @@ def brute_word_bounded(patterns, text):
 PATTERNS = ["ab", "abc", "bc", "c", "abcd", "b a", "aa"]
 
 
-def test_matches_equal_bruteforce_random_strings():
-    rng = np.random.RandomState(1)
-    alphabet = "abcd "
-    for trial in range(30):
-        text = "".join(alphabet[k] for k in rng.randint(0, len(alphabet), size=200))
-        ac = build_automaton(PATTERNS)
-        got = sorted(ac.iter_matches(text))
-        assert got == brute_matches(PATTERNS, text), f"trial {trial}"
-
-
 def test_word_bounded_equal_bruteforce():
     rng = np.random.RandomState(2)
     alphabet = "abcd .,"
+    ac = FlatMatcher(PATTERNS)
     for trial in range(30):
         text = "".join(alphabet[k] for k in rng.randint(0, len(alphabet), size=300))
-        ac = build_automaton(PATTERNS)
-        assert find_word_bounded(ac, text) == brute_word_bounded(PATTERNS, text)
+        assert ac.find_word_bounded(text) == brute_word_bounded(PATTERNS, text)
+
+    # the batch path (the one the spot UDF runs): None/empty docs, non-ASCII
+    # and astral text (UTF-32 offsets), and a NUL-bearing pattern, which
+    # forces the per-document fallback
+    unicode_pats = PATTERNS + ["é", "ßa", "中 a", "𝔸b", "a𝔸"]
+    alphabet = "abcd .,éß中𝔸"
+    for pats in (unicode_pats, unicode_pats + ["a\x00b"]):
+        ac = FlatMatcher(pats)
+        for trial in range(20):
+            batch = [
+                "".join(alphabet[k] for k in rng.randint(0, len(alphabet), size=n))
+                for n in rng.randint(0, 120, size=6)
+            ] + [None, "", "a\x00b a"]
+            rng.shuffle(batch)
+            # adjacent docs a NUL-separated join would fuse into "a\x00b"
+            batch += ["c a", "b c"]
+            want = [brute_word_bounded(pats, t) if t else [] for t in batch]
+            assert ac.find_word_bounded_batch(batch) == want, (pats, trial)
 
 
 def test_nested_and_overlapping_patterns_all_reported():
-    ac = build_automaton(["sort merge join", "sort merge", "merge join", "merge", "join"])
+    ac = FlatMatcher(["sort merge join", "sort merge", "merge join", "merge", "join"])
     text = "a sort merge join b"
-    got = {(s, p) for s, p in find_word_bounded(ac, text)}
+    got = {(s, p) for s, p in ac.find_word_bounded(text)}
     assert got == {
         (2, "sort merge join"),
         (2, "sort merge"),
@@ -70,25 +78,25 @@ def test_nested_and_overlapping_patterns_all_reported():
 
 
 def test_boundary_rejections():
-    ac = build_automaton(["spark"])
-    assert find_word_bounded(ac, "sparkx") == []
-    assert find_word_bounded(ac, "xspark") == []
-    assert find_word_bounded(ac, "spark.") == [(0, "spark")]
-    assert find_word_bounded(ac, "(spark)") == [(1, "spark")]
+    ac = FlatMatcher(["spark"])
+    assert ac.find_word_bounded("sparkx") == []
+    assert ac.find_word_bounded("xspark") == []
+    assert ac.find_word_bounded("spark.") == [(0, "spark")]
+    assert ac.find_word_bounded("(spark)") == [(1, "spark")]
 
 
 def test_artifact_path_equals_broadcast(spark, tmp_path):
     """Spotting through the executor-built artifact automaton must equal
     spotting through a driver-built broadcast automaton."""
     from kgspark import synth
-    from kgspark.automaton import build_automaton, write_lexicon_artifact
+    from kgspark.automaton import write_lexicon_artifact
     from kgspark.spot import spot_documents
 
     docs = synth.synth_documents(spark, n_docs=30).select(
         F.col("url").alias("doc_id"), "text"
     )
     forms = sorted({r[0] for r in synth.LEXICON_ROWS})
-    bc = spark.sparkContext.broadcast(build_automaton(forms))
+    bc = spark.sparkContext.broadcast(FlatMatcher(forms))
     path = str(tmp_path / "lexforms")
     write_lexicon_artifact(synth.lexicon_df(spark), path)
     via_bc = sorted(map(tuple, spot_documents(docs, bc, doc_col="doc_id").collect()))
@@ -101,7 +109,7 @@ def test_big_lexicon_automaton_spots_correctly(spark, tmp_path):
     forms never appear in the corpus, so spotting must return exactly the
     same mentions as the 31-form lexicon (and the build must not blow up)."""
     from kgspark import synth
-    from kgspark.automaton import build_automaton, write_lexicon_artifact
+    from kgspark.automaton import write_lexicon_artifact
     from kgspark.spot import spot_documents
 
     docs = synth.synth_documents(spark, n_docs=20).select(
@@ -111,21 +119,7 @@ def test_big_lexicon_automaton_spots_correctly(spark, tmp_path):
     write_lexicon_artifact(synth.big_lexicon_df(spark, n=100_000), path)
     big = sorted(map(tuple, spot_documents(docs, path, doc_col="doc_id").collect()))
     small_bc = spark.sparkContext.broadcast(
-        build_automaton(sorted({r[0] for r in synth.LEXICON_ROWS}))
+        FlatMatcher(sorted({r[0] for r in synth.LEXICON_ROWS}))
     )
     small = sorted(map(tuple, spot_documents(docs, small_bc, doc_col="doc_id").collect()))
     assert big == small and len(big) > 0
-
-
-def test_c_adapter_matches_pure():
-    """pyahocorasick adapter parity — exercised wherever the wheel exists."""
-    import pytest as _pt
-
-    _pt.importorskip("ahocorasick")
-    from kgspark.automaton import AhoCorasick, CAhoCorasick, find_word_bounded
-
-    pats = ["join", "merge join", "sort merge join", "a", "spark"]
-    text = "a sort merge join beats a hash join in spark sometimes"
-    pure = find_word_bounded(AhoCorasick(pats), text)
-    fast = find_word_bounded(CAhoCorasick(pats), text)
-    assert pure == fast

@@ -77,6 +77,37 @@ def test_checkpoint_resume(spark, tmp_path):
     assert manifest["output_rows"] == sum(p["rows"] for p in manifest["partitions"])
 
 
+def test_half_written_stage_recomputes_not_resumes(spark, tmp_path):
+    """A stage whose data is on disk without a complete manifest (deleted,
+    or still marked incomplete) is recomputed; every other stage resumes
+    and the triples are unchanged."""
+    docs = synth.golden_documents(spark)
+    cfg = PipelineConfig(checkpoint_root=str(tmp_path))
+    triples = lambda out: sorted(map(tuple, out["triples"].collect()))
+    expected = triples(_run(spark, docs, cfg))
+    manifest_path = os.path.join(str(tmp_path), "link", "_kg_manifest.json")
+    stale = json.load(open(manifest_path))
+
+    # the Hadoop local FS checks this checksum sidecar on read, so it must
+    # go with any out-of-band edit of the manifest
+    crc_path = os.path.join(str(tmp_path), "link", "._kg_manifest.json.crc")
+
+    for how in ("deleted", "incomplete"):
+        if os.path.exists(crc_path):
+            os.remove(crc_path)
+        if how == "deleted":
+            os.remove(manifest_path)
+        else:
+            with open(manifest_path, "w") as f:
+                json.dump({**stale, "complete": False}, f)
+        out = _run(spark, docs, cfg)
+        assert triples(out) == expected, how
+        resumed = {m["stage"]: m["resumed"] for m in out["metrics"]}
+        assert resumed.pop("link") is False, how
+        assert resumed and all(resumed.values()), (how, resumed)
+        assert json.load(open(manifest_path))["complete"] is True, how
+
+
 def test_lexicon_artifact_reused_not_rewritten(spark, tmp_path):
     """An explicitly configured, already-complete lexicon artifact is
     reused (probed for _SUCCESS via the Hadoop FS API, so the check also

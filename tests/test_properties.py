@@ -7,7 +7,7 @@ here they run over generated inputs instead of two fixtures.
 
 from hypothesis import example, given, settings, strategies as st
 
-from kgspark.automaton import build_automaton, find_word_bounded
+from kgspark.automaton import FlatMatcher
 from kgspark.extract import extract_text_from_html
 from kgspark.segment import segment_document, segment_string
 from kgspark.synth import build_html
@@ -229,11 +229,11 @@ def test_segment_reconstruction_property(words, max_len, overlap):
 @given(WORDS, st.integers(100, 300))
 def test_segmented_spotting_equals_direct(words, max_len):
     x = " ".join(words)
-    ac = build_automaton(PATTERNS)
-    direct = {(i + 1, p) for i, p in find_word_bounded(ac, x)}
+    ac = FlatMatcher(PATTERNS)
+    direct = {(i + 1, p) for i, p in ac.find_word_bounded(x)}
     via = set()
     for seg in segment_document(x, max_len=max_len, overlap=max_len // 4):
-        for off0, p in find_word_bounded(ac, seg["seg_text"]):
+        for off0, p in ac.find_word_bounded(seg["seg_text"]):
             s = seg["seg_off"] + off0
             if seg["keep_from"] <= s < seg["keep_to"]:
                 via.add((s, p))

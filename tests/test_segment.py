@@ -6,7 +6,7 @@ Pure-Python tests of the kernel math (fast, no Spark session needed).
 import numpy as np
 import pytest
 
-from kgspark.automaton import build_automaton, find_word_bounded
+from kgspark.automaton import FlatMatcher
 from kgspark.segment import (
     escaped_len,
     segment_document,
@@ -66,7 +66,7 @@ def _spot_via_segments(text, automaton, max_len, overlap):
     spot each segment, rebase offsets, apply stitch bounds, union."""
     out = set()
     for seg in segment_document(text, max_len=max_len, overlap=overlap):
-        for off0, sf in find_word_bounded(automaton, seg["seg_text"]):
+        for off0, sf in automaton.find_word_bounded(seg["seg_text"]):
             start = seg["seg_off"] + off0
             if seg["keep_from"] <= start < seg["keep_to"]:
                 out.add((start, sf))
@@ -80,8 +80,8 @@ def test_segmentation_invariance_of_mention_set(params):
     max_len, overlap = params
     vocab = ("alpha", "beta", "gamma", "delta", "beta gamma", "x")
     text = soup(1500, seed=3, vocab=("alpha", "beta", "gamma", "delta", "x"))
-    ac = build_automaton(["alpha", "beta", "gamma", "beta gamma", "alpha beta gamma"])
-    direct = {(i + 1, sf) for i, sf in find_word_bounded(ac, text)}
+    ac = FlatMatcher(["alpha", "beta", "gamma", "beta gamma", "alpha beta gamma"])
+    direct = {(i + 1, sf) for i, sf in ac.find_word_bounded(text)}
     via_segs = _spot_via_segments(text, ac, max_len=max_len, overlap=overlap)
     assert via_segs == direct
 

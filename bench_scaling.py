@@ -320,60 +320,6 @@ pipeline/hardware {res['per_round_normalized']} -> median
 {bw_line}"""
 
 
-def _stage_table(s: dict) -> str:
-    levels = sorted(s["levels"], key=int)
-    lo_c, hi_c = levels[0], levels[-1]
-    lo, hi = s["levels"][lo_c], s["levels"][hi_c]
-    rows = "\n".join(
-        f"| {name} | {lo['stages'][name]} | {hi['stages'][name]} | {eff} |"
-        for name, eff in s["per_stage_efficiency"].items())
-    return (f"{lo['n_docs']} docs:\n\n"
-            f"| stage | local[{lo_c}] (s) | local[{hi_c}] (s) | eff |\n"
-            f"| --- | --- | --- | --- |\n{rows}")
-
-
-def _stages_section() -> str:
-    """Measured per-stage scaling from bench_stages.py — rendered at BOTH
-    corpus sizes when available, because the two-size comparison is the
-    evidence that separates fixed per-stage serial cost from scalable
-    work (round-4 finding)."""
-    path = os.path.join(HERE, "BENCH", "STAGES.json")
-    if not os.path.exists(path):
-        return ("Per-stage breakdown: `python bench_stages.py` (writes "
-                "BENCH/STAGES.json).")
-    with open(path) as fh:
-        s = json.load(fh)
-    small_path = os.path.join(HERE, "BENCH", "STAGES_50K.json")
-    small = None
-    if os.path.exists(small_path):
-        with open(small_path) as fh:
-            small = json.load(fh)
-    parts = ["""Per-stage breakdown (`python bench_stages.py`, each stage isolated on
-persisted input, pinned levels, shuffle partitions scaled 4x cores). Run
-at TWO corpus sizes to separate per-stage constants from scalable work —
-round 3 measured `link` 0.576 / `overlaps` 0.548 at 50k docs and left
-"shuffle-bound" as the suspect; the two-size comparison shows it was the
-fixed per-stage serial cost (driver planning, broadcast/dim builds,
-python-worker spin-up: ~2-5 s per stage regardless of level), i.e.
-Amdahl on short stages, not shuffle bandwidth:"""]
-    if small is not None:
-        parts.append(_stage_table(small) + "  (BENCH/STAGES_50K.json)")
-    parts.append(_stage_table(s) + "  (BENCH/STAGES.json)")
-    parts.append("""Every stage that looked "shuffle-bound" at the small size climbs once
-the constant is amortized — at 200k docs overlaps reaches 0.82 and
-triples-distinct 0.97 at 2->8; the two widest shuffles are the BEST
-scalers at production-shaped stage lengths, which is what transfers to a
-real cluster (a 10^12-doc stage runs hours, not seconds). `link` is the
-remaining laggard: it pays the lexicon broadcast build plus the doc-keyed
-repartition in one short stage; its absolute cost also dropped with the
-round-4 one-exchange restructure (disambig.disambiguate
-(partition_by_doc=True) — HashPartitioning(doc_id) satisfies the top-1
-groupBy AND every downstream overlap window, so link+overlaps share ONE
-exchange; absolute overlaps cost 22.5 -> 13.0 s at local[2] on the 50k
-protocol vs round 3).""")
-    return "\n\n".join(parts)
-
-
 def _dram_section() -> str:
     """Binding-resource evidence from scripts/dram_probe.py, if present.
 
@@ -543,20 +489,18 @@ for one VM's fixed memory bus and LLC; the probes below show the
 hardware itself stops delivering 4x there, which is a property of the
 sandbox, not the plan.
 {_dram_section()}
-{_stages_section()}
-
 Plan audit: BENCH/PLANS.md — one doc-keyed exchange serves link plus the
-whole overlap family (ReuseExchange merges the hit/miss branches),
-broadcast joins for every dim, partial aggregation before every wide
-shuffle, id-only LSH band joins with the head-bucket cap.
+whole single-pass overlap family, broadcast joins for every dim, partial
+aggregation before every wide shuffle, id-only LSH band joins with the
+head-bucket cap.
 
 Pipeline under test: extract(html->text, pandas UDF) -> segment (+stitch
-bounds) -> Aho-Corasick spot (per-worker automaton from the parquet
+bounds) -> FlatMatcher spot (per-host tables from the parquet lexicon
 artifact) -> candidates x broadcast lexicon -> prior+context
-disambiguation (min_by hash agg) -> overlap detect/categorize/resolve
-(doc-local windows, one exchange, one hit/miss split around the window
-family) -> entity types -> pre-closed redirect + sameAs broadcast joins
--> distinct (subj, pred, obj) triples (noop sink).
+disambiguation (min_by agg) -> overlap detect/categorize/resolve
+(doc-local windows, one exchange, one single-pass window chain) ->
+entity types -> pre-closed redirect + sameAs broadcast joins -> distinct
+(subj, pred, obj) triples (noop sink).
 
 Reproduce: `python bench_scaling.py` (env: KGSPARK_SCALE_DOCS,
 KGSPARK_SCALE_LEVELS, KGSPARK_SCALE_ROUNDS); each run persists

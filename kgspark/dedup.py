@@ -139,13 +139,12 @@ def minhash_docs(
     k: int = 16,
     shingle_words: int = 3,
     char_mode: bool = False,
-    persist: bool = True,
 ) -> DataFrame:
     """(doc_id, shingles, sig).
 
-    ``persist=True`` materializes the md5-hashed shingles before the k
-    permutations — Catalyst's projection collapse would otherwise inline
-    the md5 into every permutation lambda and hash each shingle k times.
+    The md5-hashed shingles are persisted before the k permutations —
+    Catalyst's projection collapse would otherwise inline the md5 into
+    every permutation lambda and hash each shingle k times.
     """
     sh = (
         char_ngrams(F.col(text_col), shingle_words)
@@ -157,8 +156,7 @@ def minhash_docs(
         .filter(F.size("shingles") > 0)
         .withColumn("sh_hash", F.transform(F.col("shingles"), _hash64_expr))
     )
-    if persist:
-        hashed = _rotating_persist(hashed, "minhash_docs.hashed")
+    hashed = _rotating_persist(hashed, "minhash_docs.hashed")
     return hashed.withColumn("sig", minhash_signature(F.col("sh_hash"), k)).drop(
         "sh_hash"
     )

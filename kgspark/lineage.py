@@ -26,6 +26,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 MANIFEST_NAME = "_kg_manifest.json"
+# Stage-output format version: a manifest written under another version
+# never resumes, so bumping it invalidates every existing checkpoint.
+STAGE_VERSION = "v1"
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -70,12 +73,7 @@ class StageRunner:
         self.enabled = checkpoint_root is not None
         self.metrics: list[dict] = []
 
-    def run(
-        self,
-        name: str,
-        fn: Callable[[], DataFrame],
-        version: str = "v1",
-    ) -> DataFrame:
+    def run(self, name: str, fn: Callable[[], DataFrame]) -> DataFrame:
         """Execute (or resume) one stage.
 
         Without a checkpoint root the stage stays lazy (pure plan
@@ -90,7 +88,7 @@ class StageRunner:
         out_dir = self.root.rstrip("/") + "/" + name
         manifest_path = out_dir + "/" + MANIFEST_NAME
         manifest = read_manifest(self.spark, manifest_path)
-        if manifest and manifest.get("complete") and manifest.get("version") == version:
+        if manifest and manifest.get("complete") and manifest.get("version") == STAGE_VERSION:
             self.metrics.append({**manifest, "resumed": True})
             return self.spark.read.parquet(out_dir)
 
@@ -109,7 +107,7 @@ class StageRunner:
         per_file.sort(key=lambda p: p["file"])
         manifest = {
             "stage": name,
-            "version": version,
+            "version": STAGE_VERSION,
             "complete": True,
             "output_rows": sum(p["rows"] for p in per_file),
             "partitions": per_file,

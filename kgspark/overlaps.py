@@ -105,7 +105,6 @@ def categorize_overlap(
     experimental: bool = False,
     keep_type_col: bool = False,
     span_unit: str = "char",
-    all_grouped: bool = False,
 ) -> DataFrame:
     """Adds the eight boolean ``ovl_*`` columns (R/overlaps.R:296-398).
 
@@ -135,8 +134,7 @@ def categorize_overlap(
     # (bounded by a document's mention count, never globally), every flag
     # is already null-guarded on ``ovl_id``, and evaluating the windows
     # over the null groups costs one sorted pass — far cheaper than a
-    # second upstream execution. ``all_grouped`` is kept for API
-    # compatibility; both values take the same single-pass plan.
+    # second upstream execution.
     s, e = F.col(start_col), F.col(end_col)
     length = e - s
     # Window-pass economy: the original formulation chained ten
@@ -367,7 +365,6 @@ def resolve_overlap(
     start_col: str = "start",
     end_col: str = "end",
     text_col: str = "text",
-    all_grouped: bool = False,
 ) -> DataFrame:
     """Keep exactly one row per overlap group (R/overlaps.R:558-638).
 

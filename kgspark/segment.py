@@ -162,7 +162,6 @@ def segment_documents(
     max_len: int = 7990,
     overlap: int = 500,
     rebalance: bool = False,
-    rebalance_partitions: int | None = None,
 ) -> DataFrame:
     """documents -> one row per (doc, segment); large docs fan out.
 
@@ -188,9 +187,7 @@ def segment_documents(
         .drop("_seg")
     )
     if rebalance:
-        n = rebalance_partitions or int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
+        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         out = out.repartition(n, F.col("seg_off"), F.xxhash64("seg_text"))
     return out
 

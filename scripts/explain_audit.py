@@ -79,17 +79,14 @@ def main() -> int:
     checks.append(("top-1 is partial+final aggregate", n_partial_final >= 2, p))
     checks.append(("no Window operator in disambiguate", "Window" not in p, p))
 
-    # 4. overlap family: the window stack (detect+categorize+resolve, ~15
-    # Window ops) must share ONE doc-keyed exchange per hit/miss branch —
-    # two branches total (Catalyst's per-branch column pruning makes the
-    # branches' exchanges non-identical, so ReuseExchange cannot merge
-    # them; run_pipeline caches the split input instead, see pipeline.py).
+    # 4. overlap family: the single-pass window stack
+    # (detect+categorize+resolve) must run on ONE doc-keyed exchange.
     p = plan_of(entrymod.q_resolve_overlap(spark, SF))
     sections.append(("overlaps detect+categorize+resolve", p))
     n_window_exchanges = len(re.findall(r"hashpartitioning\(doc_id#\d+L?, \d+\)", p))
     checks.append(
-        (f"overlap window family: one doc-keyed exchange per split branch (found {n_window_exchanges} for 2 branches)",
-         n_window_exchanges <= 2, p),
+        (f"overlap window family: one doc-keyed exchange (found {n_window_exchanges})",
+         n_window_exchanges == 1, p),
     )
 
     # 5. canonicalization dims broadcast. Production feeds a PRE-CLOSED
@@ -168,27 +165,24 @@ def main() -> int:
                    all("shingles" not in s for s in band_exchange_schemas), p))
 
     # 12. pipeline link+overlaps: ONE doc-keyed exchange serves the top-1
-    # aggregation AND the whole overlap window family (per hit/miss branch;
-    # 2 uncached branches here — run_pipeline caches the split input).
+    # aggregation AND the whole overlap window family.
     from kgspark import disambig as _disambig, overlaps as _overlaps, segment as _segment
     _docs_pl = docs.select(
         F.col("doc_id").cast("string").alias("url"), "text"
     ).limit(200)
     _segs = _segment.segment_documents(_docs_pl).withColumn(
         "doc_tokens", _disambig.hashed_tokens(F.col("text")))
-    _spots = entrymod._spot_from_segments(spark, _segs) if hasattr(
-        entrymod, "_spot_from_segments") else None
-    if _spots is None:
-        # spot via the broadcast-automaton path used by q_spot_mentions
-        from kgspark import synth as _synth
-        from kgspark.automaton import write_lexicon_artifact as _wla
-        import tempfile as _tf
-        _lex = _synth.lexicon_df(spark)
-        _art = _wla(_lex, _tf.mkdtemp(prefix="audit-lex-"))
-        from kgspark import spot as _spot
-        _spots = _segment.stitch_filter(
-            _spot.spot_segments(_segs, _art, doc_col="url",
-                                keep_extra=("keep_from", "keep_to", "doc_tokens")))
+    # spot through the lexicon artifact, as run_pipeline does
+    import tempfile as _tf
+
+    from kgspark import spot as _spot, synth as _synth
+    from kgspark.automaton import write_lexicon_artifact as _wla
+
+    _lex = _synth.lexicon_df(spark)
+    _art = _wla(_lex, _tf.mkdtemp(prefix="audit-lex-"))
+    _spots = _segment.stitch_filter(
+        _spot.spot_segments(_segs, _art, doc_col="url",
+                            keep_extra=("keep_from", "keep_to", "doc_tokens")))
     _linked = _disambig.link_mentions(
         _spots, _lex, _docs_pl, doc_col="url", partition_by_doc=True)
     _resolved = _overlaps.overlap_pipeline(
@@ -198,8 +192,8 @@ def main() -> int:
     sections.append(("pipeline link+overlaps (one doc-keyed exchange)", p))
     n_doc_ex = len(re.findall(r"hashpartitioning\(doc_id#\d+[L]?, \d+\)", p))
     checks.append(
-        (f"link+overlaps share one doc-keyed exchange per branch (found {n_doc_ex} for 2 branches)",
-         n_doc_ex <= 2, p))
+        (f"link+overlaps share one doc-keyed exchange (found {n_doc_ex})",
+         n_doc_ex == 1, p))
     checks.append(
         ("no (doc_id, start, text) aggregation exchange remains",
          not re.search(r"hashpartitioning\(doc_id#\d+L?, start#", p), p))

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from kgspark.disambig import doc_tokens, generate_candidates, disambiguate, link_mentions
+from kgspark.disambig import attach_types, doc_tokens, generate_candidates, disambiguate, link_mentions
 from kgspark.schemas import LEXICON_SCHEMA
 
 LEX_ROWS = [
@@ -96,3 +96,40 @@ def test_type_pivot_format(spark):
     assert r["DBpedia_type"] == "|Software|"
     assert r["Wikidata_type"] == "|Q7397|"
     assert r["types"]["DBpedia"] == ["Software"]
+
+
+def _typed_rows(df):
+    return sorted(
+        (r["doc_id"], r["start"], r["text"], r["dbpedia_uri"],
+         tuple(sorted((k, tuple(v) if v is not None else None)
+                      for k, v in r["types"].items())),
+         r["DBpedia_type"], r["Wikidata_type"])
+        for r in df.collect()
+    )
+
+
+def test_attached_types_equal_post_hoc_attach_types(spark):
+    """On the golden corpus, the typed link output equals the narrow link
+    output with ``attach_types`` applied afterwards (the pipeline's order),
+    with and without the D6 ``types`` restriction."""
+    from kgspark import synth
+    from kgspark.automaton import FlatMatcher
+    from kgspark.spot import spot_documents
+
+    docs = synth.golden_documents(spark)
+    glex = synth.golden_lexicon_df(spark)
+    forms = sorted({r[0] for r in synth.GOLDEN_LEXICON_ROWS})
+    spots = spot_documents(docs, spark.sparkContext.broadcast(FlatMatcher(forms)))
+
+    typed = _typed_rows(link_mentions(spots, glex, docs, attach_type_cols=True))
+    post_hoc = _typed_rows(attach_types(
+        link_mentions(spots, glex, docs, attach_type_cols=False), glex))
+    assert typed == post_hoc and len(typed) > 0
+
+    wanted = ["Place"]
+    restricted = _typed_rows(
+        link_mentions(spots, glex, docs, types=wanted, attach_type_cols=True))
+    expected = [r for r in post_hoc
+                if set(dict(r[4]).get("DBpedia") or ()) & set(wanted)]
+    assert restricted == expected
+    assert 0 < len(restricted) < len(post_hoc)

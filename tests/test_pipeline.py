@@ -108,6 +108,34 @@ def test_half_written_stage_recomputes_not_resumes(spark, tmp_path):
         assert json.load(open(manifest_path))["complete"] is True, how
 
 
+def test_stale_version_stage_recomputes_not_resumes(spark, tmp_path):
+    """A complete manifest written under another stage version does not
+    resume: that stage recomputes and its manifest is rewritten at the
+    current version; every other stage resumes."""
+    from kgspark.lineage import STAGE_VERSION
+
+    docs = synth.golden_documents(spark)
+    cfg = PipelineConfig(checkpoint_root=str(tmp_path))
+    triples = lambda out: sorted(map(tuple, out["triples"].collect()))
+    expected = triples(_run(spark, docs, cfg))
+    stage_dir = os.path.join(str(tmp_path), "overlaps")
+    manifest_path = os.path.join(stage_dir, "_kg_manifest.json")
+    stale = json.load(open(manifest_path))
+    assert stale["version"] == STAGE_VERSION and stale["complete"] is True
+
+    crc_path = os.path.join(stage_dir, "._kg_manifest.json.crc")
+    if os.path.exists(crc_path):
+        os.remove(crc_path)
+    with open(manifest_path, "w") as f:
+        json.dump({**stale, "version": "v0"}, f)
+    out = _run(spark, docs, cfg)
+    assert triples(out) == expected
+    resumed = {m["stage"]: m["resumed"] for m in out["metrics"]}
+    assert resumed.pop("overlaps") is False
+    assert resumed and all(resumed.values()), resumed
+    assert json.load(open(manifest_path))["version"] == STAGE_VERSION
+
+
 def test_lexicon_artifact_reused_not_rewritten(spark, tmp_path):
     """An explicitly configured, already-complete lexicon artifact is
     reused (probed for _SUCCESS via the Hadoop FS API, so the check also

@@ -58,7 +58,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession, functions as F
 
     from kgspark import textops
-    from kgspark.lineage import write_manifest
+    from kgspark.lineage import count_on_write, write_manifest
     from kgspark.sampling import mixture_sample
 
     spark = SparkSession.builder.appName("kgspark-curate").getOrCreate()
@@ -115,11 +115,7 @@ def main(argv: list[str] | None = None) -> int:
     # .count() action per stage. Frames that are consumed by two branches
     # are persisted BEFORE the branches split, so block-level cache locking
     # guarantees each observed partition is computed exactly once.
-    def _count_obs(frame, name):
-        o = Observation(name)
-        return frame.observe(o, F.count(F.lit(1)).alias("n")), o
-
-    deduped, obs_dedup = _count_obs(deduped, "n_after_dedup")
+    deduped, obs_dedup = count_on_write(deduped, "n_after_dedup")
     if args.max_dup_span_frac is not None or args.per_source_cap:
         # the next enabled stage consumes deduped in two branches
         # (fingerprint/sample + join-back): persist above the split so
@@ -149,7 +145,7 @@ def main(argv: list[str] | None = None) -> int:
             )
             .drop("_dup_toks")
         )
-        deduped, obs_span = _count_obs(deduped, "n_after_span_dedup")
+        deduped, obs_span = count_on_write(deduped, "n_after_span_dedup")
         if args.per_source_cap:
             deduped = deduped.persist()  # 2c double-consumes this frame too
 
@@ -164,7 +160,7 @@ def main(argv: list[str] | None = None) -> int:
             id_col=args.id_col, stratum_col=args.source_col,
         ).select(args.id_col)
         deduped = deduped.join(picked, args.id_col)
-        deduped, obs_cap = _count_obs(deduped, "n_after_source_cap")
+        deduped, obs_cap = count_on_write(deduped, "n_after_source_cap")
 
     # --- stage 3: optional mixture thinning ---
     if args.mixture:
@@ -174,7 +170,7 @@ def main(argv: list[str] | None = None) -> int:
         )
     else:
         curated = deduped
-    curated, obs_cur = _count_obs(curated, "n_curated")
+    curated, obs_cur = count_on_write(curated, "n_curated")
     # cache: packing + the write both consume it; the observe above sits
     # under the persist so its metric fills exactly once.
     curated = curated.persist()

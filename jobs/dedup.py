@@ -39,7 +39,7 @@ def main(argv: list[str] | None = None) -> int:
                     help="also write connected-component group ids")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import Observation, SparkSession, functions as F
 
     from kgspark.dedup import (
         connected_components,
@@ -48,7 +48,7 @@ def main(argv: list[str] | None = None) -> int:
         lsh_candidate_pairs,
         minhash_docs,
     )
-    from kgspark.lineage import write_manifest
+    from kgspark.lineage import count_on_write, write_manifest
 
     spark = SparkSession.builder.appName("kgspark-dedup").getOrCreate()
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -82,21 +82,26 @@ def main(argv: list[str] | None = None) -> int:
         threshold=args.threshold,
     )
     pairs_path = args.output.rstrip("/") + "/pairs"
+    pairs, n_pairs = count_on_write(pairs, "pairs")
     pairs.write.mode("overwrite").parquet(pairs_path)
-    n_pairs = spark.read.parquet(pairs_path).count()
 
     n_groups = None
     if args.groups:
+        # the re-read cuts the pair lineage before the label iteration
         groups = connected_components(spark.read.parquet(pairs_path))
-        groups_path = args.output.rstrip("/") + "/groups"
-        groups.write.mode("overwrite").parquet(groups_path)
-        n_groups = (
-            spark.read.parquet(groups_path).select("component").distinct().count()
+        # a component's id is its minimum node, so each group has exactly
+        # one row with node == component
+        obs_groups = Observation("groups")
+        groups = groups.observe(
+            obs_groups,
+            F.sum((F.col("node") == F.col("component")).cast("long")).alias("n"),
         )
+        groups.write.mode("overwrite").parquet(args.output.rstrip("/") + "/groups")
+        n_groups = obs_groups.get["n"] or 0
 
     summary = {
         "wall_sec": round(time.time() - t0, 1),
-        "pairs": n_pairs,
+        "pairs": n_pairs.get["n"],
         "groups": n_groups,
         "max_bucket_size": args.max_bucket_size,
         "dropped_buckets": int(dropped["n_buckets"]),

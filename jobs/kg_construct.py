@@ -57,6 +57,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from kgspark import synth
+    from kgspark.lineage import count_on_write
     from kgspark.pipeline import PipelineConfig, run_pipeline
     from kgspark.triples import write_triples
 
@@ -181,10 +182,11 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     out = run_pipeline(spark, docs, lexicon, redirects, sameas, cfg, doc_col=doc_col)
-    write_triples(out["triples"], args.output)
+    triples, n_triples = count_on_write(out["triples"], "triples")
+    write_triples(triples, args.output)
     summary = {
         "wall_sec": round(time.time() - t0, 1),
-        "triples": spark.read.parquet(args.output).count(),
+        "triples": n_triples.get["n"],
         "stages": out["metrics"],
     }
     print(json.dumps(summary))

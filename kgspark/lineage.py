@@ -12,9 +12,12 @@ also cuts lineage (no recomputation cascades).
 
 Manifest I/O goes through the Hadoop FileSystem API, so a checkpoint root
 on HDFS/S3A (the 10^12-doc deployment) behaves exactly like a local dir —
-``os.path`` would silently never resume there. Lineage counts are computed
-from the files actually written (grouped by ``input_file_name()``), which
-map 1:1 to the write partitions, not to whatever splits a re-read chooses.
+``os.path`` would silently never resume there. Each stage is written once
+and never re-scanned: the read-back takes the frame's own schema (no
+inference job), and the per-file row counts come from the parquet footers
+of the files actually written, which map 1:1 to the write partitions.
+Counts a job needs from a write that is not a stage checkpoint ride that
+write as an ``Observation`` (``count_on_write``).
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ import json
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 MANIFEST_NAME = "_kg_manifest.json"
 # Stage-output format version: a manifest written under another version
@@ -36,6 +39,35 @@ def _hadoop_fs(spark: SparkSession, path: str):
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, hpath
+
+
+def count_on_write(frame: DataFrame, name: str) -> tuple[DataFrame, Observation]:
+    """``frame`` with a row count attached: the Observation fills when the
+    first action over the returned frame (its write) completes, so the
+    count needs no pass of its own."""
+    obs = Observation(name)
+    return frame.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def _footer_row_counts(spark: SparkSession, out_dir: str) -> list[dict]:
+    """Rows per written ``part-*.parquet`` file, from the parquet footers
+    (a metadata read per file, no Spark job)."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    fs, hpath = _hadoop_fs(spark, out_dir)
+    per_file = []
+    for st in fs.listStatus(hpath):
+        name = st.getPath().getName()
+        if not (name.startswith("part-") and name.endswith(".parquet")):
+            continue
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+        )
+        try:
+            per_file.append({"file": name, "rows": int(reader.getRecordCount())})
+        finally:
+            reader.close()
+    return sorted(per_file, key=lambda p: p["file"])
 
 
 def read_manifest(spark: SparkSession, path: str) -> dict | None:
@@ -95,16 +127,7 @@ class StageRunner:
         t0 = time.time()
         df = fn()
         df.write.mode("overwrite").parquet(out_dir)
-        back = self.spark.read.parquet(out_dir)
-        # lineage: rows per file actually written (files map 1:1 to the
-        # write partitions, unlike spark_partition_id over a re-read)
-        per_file = [
-            {"file": r["f"].rsplit("/", 1)[-1], "rows": int(r["rows"])}
-            for r in back.groupBy(F.input_file_name().alias("f"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        ]
-        per_file.sort(key=lambda p: p["file"])
+        per_file = _footer_row_counts(self.spark, out_dir)
         manifest = {
             "stage": name,
             "version": STAGE_VERSION,
@@ -116,4 +139,4 @@ class StageRunner:
         }
         write_manifest(self.spark, manifest_path, manifest)
         self.metrics.append(manifest)
-        return back
+        return self.spark.read.schema(df.schema).parquet(out_dir)

@@ -15,7 +15,8 @@ Shuffle census of the whole plan: ONE doc-keyed exchange shared by the
 top-1 link aggregation and the entire overlap window family
 (HashPartitioning(doc_id) satisfies both clustered distributions —
 disambig.disambiguate(partition_by_doc=True)), one distinct for the
-triple set, plus the final write repartition. Everything else is narrow.
+triple set, plus the terminal write's ``REBALANCE`` on ``pred``, which AQE
+sizes from the data. Everything else is narrow.
 """
 
 from __future__ import annotations

@@ -78,35 +78,6 @@ def hamming_cutoff(threshold: float, sig_bits: int, slack: float = 3.0) -> int:
     return int(math.ceil(mean + slack * sd))
 
 
-def _signature_udf(planes: list[list[float]]):
-    """Arrow-batched wide sign signature, packed into 62-bit long words.
-
-    One O(dim x sig_bits) pass per VECTOR (not per pair): bit i of the
-    signature is the sign of the dot product with plane i. The dot uses
-    the same column-by-column accumulation as ``_pair_dot_udf`` — the
-    left-to-right IEEE sequence of DuckDB's list_dot_product — so the raw
-    double, and therefore its SIGN, is bit-identical to the oracle's and
-    no rounding step is needed.
-    """
-    P = np.array(planes, dtype=np.float64)  # (bits, dim)
-    n_words = (len(planes) + SIG_WORD_BITS - 1) // SIG_WORD_BITS
-
-    @pandas_udf("array<long>")
-    def signature(vecs: pd.Series) -> pd.Series:
-        A = np.stack(vecs.values).astype(np.float64)  # (batch, dim)
-        acc = np.zeros((len(vecs), P.shape[0]), dtype=np.float64)
-        for i in range(P.shape[1]):
-            acc += A[:, i : i + 1] * P[:, i]
-        bits = acc > 0  # (batch, bits)
-        words = np.zeros((len(vecs), n_words), dtype=np.int64)
-        for b in range(P.shape[0]):
-            w, off = divmod(b, SIG_WORD_BITS)
-            words[:, w] |= bits[:, b].astype(np.int64) << off
-        return pd.Series(list(words))
-
-    return signature
-
-
 def _norm(a):
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))

@@ -49,16 +49,6 @@ def sessionize(
     )
 
 
-def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    s = sessionize(events, gap_minutes=gap_minutes)
-    return s.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.round(F.sum("value"), 6).alias("total_value"),
-    )
-
-
 SESSION_OUT_SCHEMA = (
     "user_id long, session_id string, n_events long, "
     "session_start long, session_end long, total_value double"

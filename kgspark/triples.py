@@ -3,10 +3,11 @@
 The reference writes annotations back into XML/TEI (``R/xml.R:30-209``) or a
 corpus view (``R/utils.R:129-167``); a KG-construction engine's terminal
 artifact is the graph itself. From the canonicalized annotation table we
-emit a deterministic triple set and write it partitioned by predicate,
-repartitioned by a salted subject hash — predicates have few distinct
-values (partition pruning on read) while subjects are the head-entity skew
-axis (a handful of URIs dominate mentions), so the salt spreads writers.
+emit a deterministic triple set and write it partitioned by predicate
+(few distinct values: partition pruning on read). The write is a
+``REBALANCE`` on ``pred``, so AQE sizes it from the data: small predicates
+coalesce into one file each, and a head predicate whose partition outgrows
+the advisory size is split across several writers.
 """
 
 from __future__ import annotations
@@ -62,44 +63,13 @@ def mentions_to_triples(m: DataFrame, doc_col: str = "doc_id") -> DataFrame:
     )
 
 
-def write_triples(
-    triples: DataFrame, path: str, salt_buckets: int = 64, fmt: str = "parquet"
-) -> None:
-    """Partitioned graph-table write.
-
-    Production target is Iceberg (``.writeTo(...).partitionedBy(pred,
-    bucket(N, subj))``); this container has no Iceberg runtime jar, so we
-    write directory-partitioned parquet with the same layout: partition by
-    pred, bucket-salt by subj hash.
-    """
+def write_triples(triples: DataFrame, path: str) -> None:
+    """Predicate-partitioned parquet write of the graph table, one
+    ``pred=<value>`` directory per predicate. The rebalance hint lets AQE
+    pick the number of writers per predicate from the bytes it shuffles."""
     (
-        triples.repartition(
-            salt_buckets, F.col("pred"), F.pmod(F.xxhash64("subj"), F.lit(salt_buckets))
-        )
+        triples.hint("rebalance", "pred")
         .write.mode("overwrite")
         .partitionBy("pred")
-        .format(fmt)
-        .save(path)
-    )
-
-
-def write_triples_iceberg(
-    triples: DataFrame, table: str, salt_buckets: int = 64
-) -> None:
-    """The production graph-table sink: Iceberg V2 write with hidden
-    partitioning ``(pred, bucket(N, subj))`` — partition pruning by
-    predicate on read, subject-hash bucketing against head-entity skew,
-    snapshot isolation + compaction from the table format.
-
-    Requires an Iceberg catalog on the session (``spark.sql.catalog.*``
-    conf + the iceberg-spark-runtime jar). This container ships neither,
-    so calling this raises Spark's catalog/provider error — the code path
-    is real and unit-asserted; ``write_triples`` produces the identical
-    physical layout on plain parquet as the sandbox stand-in.
-    """
-    (
-        triples.writeTo(table)
-        .partitionedBy(F.col("pred"), F.bucket(salt_buckets, F.col("subj")))
-        .using("iceberg")
-        .createOrReplace()
+        .parquet(path)
     )

@@ -113,7 +113,41 @@ def test_curate_job_span_dedup_and_source_cap(spark, tmp_path):
     assert out.filter("doc_id >= 300").count() == 0
 
 
-def test_kg_construct_from_warc_archive(spark, tmp_path):
+def test_dedup_job_counts(spark, tmp_path, capsys):
+    """The dedup summary's counts, taken on the writes, equal the written
+    output, and the manifest records the printed summary. A corpus with
+    no near-duplicates writes empty pairs/groups and still returns."""
+    from jobs.dedup import main
+
+    singletons = [
+        (30 + i, f"singleton {i} " + " ".join(f"s{i}w{j}" for j in range(10)))
+        for i in range(5)
+    ]
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    planted = [(1, base), (2, base + " lambda"), (3, base + " mu")]  # a group of 3
+    other = "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"
+    planted += [(20, other), (21, other + " eiusmod")]  # a group of 2
+
+    for name, rows, n_groups in (("planted", planted + singletons, 2),
+                                 ("unique", singletons, 0)):
+        inp = str(tmp_path / f"{name}.parquet")
+        spark.createDataFrame(rows, "doc_id long, text string").write.parquet(inp)
+        out_dir = str(tmp_path / f"dedup-{name}")
+        capsys.readouterr()
+        assert main(["--input", inp, "--output", out_dir, "--groups"]) == 0
+        summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+        pairs = spark.read.parquet(os.path.join(out_dir, "pairs"))
+        groups = spark.read.parquet(os.path.join(out_dir, "groups"))
+        assert summary["pairs"] == pairs.count(), name
+        assert (summary["pairs"] > 0) == (n_groups > 0), name
+        assert summary["groups"] == groups.select("component").distinct().count(), name
+        assert summary["groups"] == n_groups, name
+        manifest = json.load(open(os.path.join(out_dir, "_dedup_manifest.json")))
+        assert manifest == summary, name
+
+
+def test_kg_construct_from_warc_archive(spark, tmp_path, capsys):
     """Crawl wire-format to triples in one job: synth html pages packed
     into WARC files, ingested with --input-format warc."""
     from pyspark.sql import functions as F
@@ -131,13 +165,15 @@ def test_kg_construct_from_warc_archive(spark, tmp_path):
     write_warc(docs, warc_dir)
 
     out_dir = str(tmp_path / "triples")
+    capsys.readouterr()
     rc = main([
         "--input", warc_dir, "--output", out_dir,
         "--input-format", "warc", "--checkpoint", str(tmp_path / "ckpt"),
     ])
     assert rc == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     triples = spark.read.parquet(out_dir)
-    assert triples.count() > 0
+    assert summary["triples"] == triples.count() > 0
     assert set(triples.columns) >= {"subj", "obj"}
 
 

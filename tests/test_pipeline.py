@@ -72,9 +72,32 @@ def test_checkpoint_resume(spark, tmp_path):
     again = _run(spark, docs, cfg)
     assert again["triples"].count() == n1
     assert all(m["resumed"] for m in again["metrics"])
-    manifest = json.load(open(os.path.join(str(tmp_path), "spot", "_kg_manifest.json")))
-    assert manifest["complete"]
-    assert manifest["output_rows"] == sum(p["rows"] for p in manifest["partitions"])
+
+    from pyspark.sql import functions as F
+
+    from kgspark.lineage import MANIFEST_NAME, StageRunner
+
+    # a zero-row stage is written, counted and resumed like any other
+    for resumed in (False, True):
+        runner = StageRunner(spark, str(tmp_path))
+        assert runner.run("empty", lambda: docs.limit(0)).count() == 0
+        m = runner.metrics[0]
+        assert (m["output_rows"], m["resumed"]) == (0, resumed)
+
+    stages = [d for d in os.listdir(tmp_path) if os.path.exists(tmp_path / d / MANIFEST_NAME)]
+    assert {"spot", "triples", "empty"} <= set(stages)
+    for stage in stages:
+        manifest = json.load(open(tmp_path / stage / MANIFEST_NAME))
+        assert manifest["complete"], stage
+        back = spark.read.parquet(str(tmp_path / stage))
+        # reference: the per-file re-scan the footer counts replaced
+        rescan = {
+            r["f"].rsplit("/", 1)[-1]: r["count"]
+            for r in back.groupBy(F.input_file_name().alias("f")).count().collect()
+        }
+        footer = {p["file"]: p["rows"] for p in manifest["partitions"] if p["rows"]}
+        assert footer == rescan, stage
+        assert manifest["output_rows"] == back.count() == sum(rescan.values()), stage
 
 
 def test_half_written_stage_recomputes_not_resumes(spark, tmp_path):
@@ -193,34 +216,25 @@ def test_triples_deterministic_across_runs(spark):
 
 
 def test_write_triples_parquet_layout(spark, tmp_path):
-    """The parquet sink materializes the Iceberg-equivalent layout:
-    one pred=... directory per predicate (partition pruning on read)."""
-    from kgspark.triples import mentions_to_triples, write_triples
+    """The sink writes one pred=... directory per predicate (partition
+    pruning on read) holding exactly the triple set; on this tiny input
+    the rebalance coalesces each predicate into a single file."""
+    from collections import Counter
+
+    from kgspark.triples import write_triples
 
     docs = synth.synth_documents(spark, n_docs=20)
     out = run_pipeline(spark, docs, synth.lexicon_df(spark),
                        synth.redirects_df(spark), synth.sameas_df(spark),
                        PipelineConfig())
     path = str(tmp_path / "triples")
-    write_triples(out["triples"], path, salt_buckets=8)
+    write_triples(out["triples"], path)
     parts = {d for d in os.listdir(path) if d.startswith("pred=")}
     assert {"pred=kg%3AmentionedIn", "pred=kg%3AanchorOf"} <= parts
+    for d in parts:
+        files = [f for f in os.listdir(os.path.join(path, d)) if f.startswith("part-")]
+        assert len(files) == 1, (d, files)
     back = spark.read.parquet(path)
-    assert back.count() == out["triples"].count()
     assert set(back.columns) == {"subj", "pred", "obj"}
-
-
-def test_write_triples_iceberg_requires_catalog(spark):
-    """The V2 Iceberg path is real code: without an Iceberg catalog and
-    runtime jar it must fail with Spark's catalog/provider error, not
-    silently write something else."""
-    import pytest
-    from kgspark.triples import write_triples_iceberg
-
-    df = spark.createDataFrame(
-        [("s", "p", "o")], "subj string, pred string, obj string"
-    )
-    with pytest.raises(Exception) as ei:
-        write_triples_iceberg(df, "icecat.db.triples", salt_buckets=4)
-    msg = str(ei.value)
-    assert "icecat" in msg or "iceberg" in msg.lower() or "catalog" in msg.lower()
+    rows = lambda df: Counter(map(tuple, df.select("subj", "pred", "obj").collect()))
+    assert rows(back) == rows(out["triples"])

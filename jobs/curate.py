@@ -101,9 +101,10 @@ def main(argv: list[str] | None = None) -> int:
     # Observation exists to avoid. At 10^12 docs swap the persist for a
     # stage checkpoint (lineage.StageRunner) as run_pipeline does.
     kept = gated.filter(F.col("_reason") == "ok").drop("_reason").persist()
+    cached = [kept]  # released once the write's Observations are read
 
     # --- stage 2: exact dedup — keep the min-id representative ---
-    from kgspark.dedup import exact_duplicates
+    from kgspark.dedup import exact_duplicates, release_persisted
 
     reps = exact_duplicates(kept, id_col=args.id_col, text_col=args.text_col)
     deduped = kept.join(
@@ -121,6 +122,7 @@ def main(argv: list[str] | None = None) -> int:
         # (fingerprint/sample + join-back): persist above the split so
         # the observed partitions compute exactly once.
         deduped = deduped.persist()
+        cached.append(deduped)
 
     # --- stage 2b: optional substring-level dedup — drop documents whose
     # duplicated-span coverage exceeds the threshold (boilerplate-heavy
@@ -148,6 +150,7 @@ def main(argv: list[str] | None = None) -> int:
         deduped, obs_span = count_on_write(deduped, "n_after_span_dedup")
         if args.per_source_cap:
             deduped = deduped.persist()  # 2c double-consumes this frame too
+            cached.append(deduped)
 
     # --- stage 2c: optional per-source cap — at most k docs per source
     # (two-level salted top-k: no whole-source-in-one-task skew) ---
@@ -174,6 +177,7 @@ def main(argv: list[str] | None = None) -> int:
     # cache: packing + the write both consume it; the observe above sits
     # under the persist so its metric fills exactly once.
     curated = curated.persist()
+    cached.append(curated)
 
     # --- stage 4: optional pack assignment, joined back onto the docs ---
     if args.pack_budget > 0:
@@ -204,6 +208,9 @@ def main(argv: list[str] | None = None) -> int:
         manifest["n_after_span_dedup"] = obs_span.get["n"]
     if obs_cap is not None:
         manifest["n_after_source_cap"] = obs_cap.get["n"]
+    for df in cached:
+        df.unpersist()
+    release_persisted()  # dup_ngram_spans' gram stream
     write_manifest(spark, f"{args.output}/_curate_manifest.json", manifest)
     print(json.dumps(manifest))
     return 0

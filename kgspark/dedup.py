@@ -24,11 +24,8 @@ the cap is the real bound.
 
 from __future__ import annotations
 
-import logging
-
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Window, functions as F
-
-log = logging.getLogger(__name__)
 
 from kgspark.textops import fingerprint, tokens
 
@@ -56,6 +53,18 @@ def _rotating_persist(df: DataFrame, key: str) -> DataFrame:
                 pass
     _PERSIST_REGISTRY[key] = df
     return df.persist()
+
+
+def release_persisted() -> None:
+    """Unpersists every frame the registry holds — for a job whose last
+    action has run. A frame left by a stopped context holds nothing, and
+    unpersisting it fails in the JVM."""
+    for df in _PERSIST_REGISTRY.values():
+        try:
+            df.unpersist()
+        except Py4JJavaError:
+            pass
+    _PERSIST_REGISTRY.clear()
 
 
 def exact_duplicates(
@@ -354,7 +363,9 @@ def connected_components(
     takes the min of its own label and its neighbors' labels (one
     edges-to-labels equi-join + a min groupBy). Rounds needed = component
     diameter — near-dup clusters are near-cliques, so this converges in
-    2-4 rounds in practice; ``max_iter`` bounds adversarial chains. Like
+    2-4 rounds in practice; ``max_iter`` bounds adversarial chains, and
+    a chain it cannot finish raises ``RuntimeError`` instead of returning
+    an under-merge. Like
     ``canonicalize.close_redirects`` this is an offline dim build with
     per-round persist and a driver-side convergence probe (one count per
     round), not a per-query path; singleton documents never enter the
@@ -388,7 +399,6 @@ def connected_components(
         .persist()
     )
     probe = _sum_probe(labels)
-    changed = -1
     for _ in range(max_iter):
         msgs = edges.join(
             labels, edges["y"] == labels["node"]
@@ -399,23 +409,21 @@ def connected_components(
             .persist()
         )
         new_probe = _sum_probe(new_labels)
-        changed = 0 if new_probe == probe else 1
-        probe = new_probe
         labels.unpersist()
         labels = new_labels
-        if changed == 0:
+        if new_probe == probe:
             break
-    edges.unpersist()
-    if changed != 0:
-        # Component ids are NOT a fixpoint (chain diameter > max_iter) —
-        # consuming them as dedup groups would split components silently.
-        log.warning(
-            "connected_components: min-label propagation did not converge in "
-            "%d iterations (%d labels still changing); component ids are an "
-            "under-merge — raise max_iter.",
-            max_iter,
-            changed,
+        probe = new_probe
+    else:
+        # component ids are NOT a fixpoint (chain diameter > max_iter):
+        # consumed as dedup groups they would split components silently
+        edges.unpersist()
+        labels.unpersist()
+        raise RuntimeError(
+            f"connected_components: min-label propagation did not converge "
+            f"in {max_iter} iterations; raise max_iter"
         )
+    edges.unpersist()
     return labels
 
 

@@ -84,14 +84,17 @@ def linked_cte(confidence: float = CONFIDENCE) -> str:
 
 
 def detect_cte(src: str = "linked") -> str:
+    # the uri completes the order: identical spans would otherwise be tied,
+    # and DuckDB orders ties independently in each window (a row could
+    # count as new in one window and as a follower in the next)
     return f"""ovl0 AS (SELECT *, start + length(text) AS "end" FROM {src}),
   ovl1 AS (SELECT *,
-      max("end") OVER (PARTITION BY doc_id ORDER BY start, "end", text
+      max("end") OVER (PARTITION BY doc_id ORDER BY start, "end", text, dbpedia_uri NULLS FIRST
                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mpe
     FROM ovl0),
   ovl2 AS (SELECT *, CASE WHEN mpe IS NULL OR start > mpe THEN 1 ELSE 0 END AS is_new FROM ovl1),
   ovl3 AS (SELECT *,
-      sum(is_new) OVER (PARTITION BY doc_id ORDER BY start, "end", text
+      sum(is_new) OVER (PARTITION BY doc_id ORDER BY start, "end", text, dbpedia_uri NULLS FIRST
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
     FROM ovl2),
   ovl4 AS (SELECT *, count(*) OVER (PARTITION BY doc_id, grp) AS grp_n FROM ovl3),
@@ -105,7 +108,7 @@ def detect_cte(src: str = "linked") -> str:
 
 def categorize_cte(src: str = "detected") -> str:
     w = "PARTITION BY doc_id, ovl_id"
-    ws = f'{w} ORDER BY start, "end", text'
+    ws = f'{w} ORDER BY start, "end", text, dbpedia_uri NULLS FIRST'
     return f"""cat0 AS (SELECT *, "end" - start AS len_,
       len(list_distinct(list(dbpedia_uri) OVER ({w}))) AS n_uri,
       len(list_distinct(list(start::VARCHAR || ':' || "end"::VARCHAR) OVER ({w}))) AS n_span,
@@ -145,19 +148,22 @@ FLAG_SELECT = ",\n      ".join(
 
 
 def resolve_cte(keep: tuple[str, ...] = ("longest", "shortest"), src: str = "categorized",
-                tiebreak: str = "first") -> str:
+                tiebreak: str = "first", omit: tuple[str, ...] = ()) -> str:
     # WHENs in reverse so the LAST matching keep entry wins (reference
-    # parity: the R assignment loop overwrites, R/overlaps.R:569-571)
+    # parity: the R assignment loop overwrites, R/overlaps.R:569-571);
+    # an omitted row is marked -1 ahead of every keep entry
     keep_case = "CASE " + " ".join(
-        f"WHEN contains(ovl_type, 'ovl_{k}') THEN {i + 1}"
-        for i, k in reversed(list(enumerate(keep)))
+        [f"WHEN contains(ovl_type, 'ovl_{o}') THEN -1" for o in omit]
+        + [f"WHEN contains(ovl_type, 'ovl_{k}') THEN {i + 1}"
+           for i, k in reversed(list(enumerate(keep)))]
     ) + " END"
     if tiebreak == "first":
-        order = 'start, "end", text'
+        order = 'start, "end", text, dbpedia_uri NULLS FIRST'
     elif tiebreak == "hash":
         # mirror of overlaps.resolve_overlap's md5-derived tie key
         order = ("CAST('0x' || substr(md5(start::VARCHAR || '|' || "
-                 '"end"::VARCHAR || \'|\' || text || \'|\' || ovl_id), 1, 8) AS BIGINT)')
+                 '"end"::VARCHAR || \'|\' || text || \'|\' || ovl_id), 1, 8) AS BIGINT)'
+                 + ', start, "end", text, dbpedia_uri NULLS FIRST')
     else:
         raise ValueError(f"unknown tiebreak {tiebreak!r}")
     return f"""res0 AS (SELECT *, CASE WHEN ovl_id IS NULL THEN NULL ELSE {keep_case} END AS keepv FROM {src}),

@@ -1,14 +1,21 @@
 """Stage 6 — overlap detection / categorization / resolution.
 
 Native reimplementation of the reference's experimental overlap toolkit
-(``/root/reference/R/overlaps.R``) as window + aggregation plans. The
+(``R/overlaps.R``) as ONE per-document kernel. The
 reference materializes an interval self-join (``foverlaps`` type="any",
 R/overlaps.R:111) and then runs an iterative fixpoint to merge chained
 pairs (R/overlaps.R:127-165). For 1-D intervals the connected components
 are exactly the groups produced by a single running-max sweep — sort by
 (start, end), start a new group whenever ``start > max(end of all previous
-rows)`` — so the whole thing is one window pass per document: no interval
-join, no iteration, no driver loop (SURVEY §2.5 J7).
+rows)`` — so detect, categorize and resolve are segment-wise scans over a
+document's sorted mentions: no interval join, no iteration, no driver loop
+(SURVEY §2.5 J7).
+
+The scans run in ``mapInArrow`` over ``repartition(doc)`` +
+``sortWithinPartitions(doc, start, end, text)``, with numpy segment
+operations over whole Arrow batches (many documents per call); the last
+document of a batch is carried into the next one, so no document is ever
+split. After link's doc-keyed exchange Spark plans no second shuffle.
 
 Conventions preserved from the reference:
 - ``end = start + nchar(text)`` (NO -1) when no end column is given
@@ -25,7 +32,14 @@ Conventions preserved from the reference:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+import functools
+import hashlib
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 OVL_FLAGS = (
     "ovl_longest",
@@ -38,6 +52,14 @@ OVL_FLAGS = (
     "ovl_undetermined",
 )
 
+# ovl_type by code, in the order the categorization tests them; code 0 is
+# a row outside every overlap group
+_TYPES = np.array([None, "ovl_multiple", "ovl_partial", "ovl_partial|ovl_distinct",
+                   "ovl_longest", "ovl_shortest", "ovl_outer", "ovl_inner",
+                   "ovl_undetermined"], dtype=object)
+_TYPE_HAS = {f: np.array([t is not None and f in t for t in _TYPES]) for f in OVL_FLAGS}
+_DETECT, _CATEGORIZE, _RESOLVE = 1, 2, 3
+
 
 def detect_overlap(
     df: DataFrame,
@@ -48,51 +70,11 @@ def detect_overlap(
 ) -> DataFrame:
     """Adds ``end`` (if needed) and ``ovl_id`` (R/overlaps.R:38-200).
 
-    One window pass, partitioned by document — the reference's per-doc
-    ``by = "doc"`` scoping (R/overlaps.R:66-73). NULL ovl_id for rows that
-    overlap nothing.
+    Scoped per document — the reference's ``by = "doc"`` (R/overlaps.R:66-73).
+    NULL ovl_id for rows that overlap nothing.
     """
-    if end_col is None:
-        if "end" in df.columns:
-            raise ValueError(
-                "end_col is NULL but a column named 'end' already exists "
-                "(mirrors R/overlaps.R:50-56)"
-            )
-        df = df.withColumn("end", F.col(start_col) + F.length(F.col(text_col)))
-        end_col = "end"
-
-    part = [doc_col] if doc_col else []
-    order = [F.col(start_col), F.col(end_col), F.col(text_col)]
-    w = Window.partitionBy(*part).orderBy(*order)
-    # materialize each window value once per pass — referencing the window
-    # expression twice (null test + comparison) makes WindowExec evaluate
-    # the frame twice
-    out = df.withColumn(
-        "_mpe", F.max(end_col).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    ).withColumn(
-        "_is_new",
-        F.when(
-            F.col("_mpe").isNull() | (F.col(start_col) > F.col("_mpe")), F.lit(1)
-        ).otherwise(F.lit(0)),
-    )
-    # a row's group is "multi" iff the row is a non-first member, or the next
-    # row (same sort) is a non-first member — avoids a second shuffle.
-    out = out.withColumn("_nxt", F.lead("_is_new").over(w)).withColumn(
-        "_multi",
-        (F.col("_is_new") == 0)
-        | (F.col("_nxt").isNotNull() & (F.col("_nxt") == 0)),
-    )
-    k = F.sum(F.col("_is_new") * F.col("_multi").cast("int")).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
-    )
-    if doc_col:
-        ovl_id = F.format_string("ovl_%s_%d", F.col(doc_col).cast("string"), k)
-    else:
-        ovl_id = F.format_string("ovl_%d", k)
-    return (
-        out.withColumn("ovl_id", F.when(F.col("_multi"), ovl_id))
-        .drop("_mpe", "_nxt", "_is_new", "_multi")
-    )
+    df, end_col = _with_end(df, start_col, end_col, text_col)
+    return _overlap_pass(df, _DETECT, _DETECT, doc_col, start_col, end_col, text_col)
 
 
 def categorize_overlap(
@@ -108,7 +90,7 @@ def categorize_overlap(
 ) -> DataFrame:
     """Adds the eight boolean ``ovl_*`` columns (R/overlaps.R:296-398).
 
-    Containment is detected with windows instead of the reference's
+    Containment is a pair of running scans instead of the reference's
     ``foverlaps(type="within")`` (R/overlaps.R:421-424): within a group
     sorted by (start, end), row i is *inner* iff some earlier row's end
     covers it, and *outer* iff some later row's end fits inside it — exactly
@@ -120,113 +102,16 @@ def categorize_overlap(
     them in its ``all(xid==yid)`` partial test (R/overlaps.R:421-439) and
     labels such groups shortest/longest, not partial.
     """
-    part = [doc_col] if doc_col else []
-    grp = Window.partitionBy(*part, "ovl_id")
-    grp_sorted = grp.orderBy(F.col(start_col), F.col(end_col), F.col(text_col))
-
-    # Rows outside any overlap group get NULL flags by definition. Earlier
-    # rounds split them into a separate branch to keep them out of the
-    # window family — but the split consumes the upstream plan TWICE, and
-    # Catalyst's per-branch column pruning specializes the subtrees so
-    # ReuseExchange cannot dedupe them: the whole extract->spot->link chain
-    # (two python UDF stages) executed once per branch. The windows here
-    # partition by (doc, ovl_id), so NULL-ovl_id rows group per document
-    # (bounded by a document's mention count, never globally), every flag
-    # is already null-guarded on ``ovl_id``, and evaluating the windows
-    # over the null groups costs one sorted pass — far cheaper than a
-    # second upstream execution.
-    s, e = F.col(start_col), F.col(end_col)
-    length = e - s
-    # Window-pass economy: the original formulation chained ten
-    # ``withColumn`` windows, which Catalyst could not collapse (every
-    # intermediate Project blocks CollapseWindow) — the physical plan ran
-    # TWELVE WindowExec passes over the stream. Here the group-level
-    # aggregates ride ONE collect pass (same grp spec, emitted in a single
-    # projection so they share one WindowExec), and the counts at
-    # min/max length are derived from the collected length array with
-    # per-row array expressions — overlap groups are small (an overlap
-    # chain within one document), so the interpreted array math is on
-    # tiny arrays while twelve full-stream passes collapse into four.
-    # the ORDERED spec runs first: its (doc, ovl_id, start, end, text)
-    # sort satisfies every later window's lesser sort requirement
-    # ((doc, ovl_id[, start]) prefixes), so the whole family runs on ONE
-    # sort after detect's
-    x = df.select(
-        "*",
-        F.coalesce(
-            F.max(e).over(grp_sorted.rowsBetween(Window.unboundedPreceding, -1)) >= e,
-            F.lit(False),
-        ).alias("_inner"),
-        F.coalesce(
-            F.min(e).over(grp_sorted.rowsBetween(1, Window.unboundedFollowing)) <= e,
-            F.lit(False),
-        ).alias("_outer"),
-    ).select(
-        "*",
-        (
-            F.count(F.lit(1)).over(Window.partitionBy(*part, "ovl_id", start_col)) > 1
-        ).alias("_start_dup"),
-    ).select(
-        "*",
-        F.size(F.collect_set(uri_col).over(grp)).alias("_n_uri"),
-        F.size(F.collect_set(F.struct(s, e)).over(grp)).alias("_n_span"),
-        F.collect_list(length).over(grp).alias("_lens"),
-        (
-            F.max((F.col("_inner") | F.col("_start_dup")).cast("int")).over(grp) == 1
-        ).alias("_has_containment"),
-    ).select(
-        "*",
-        F.array_min(F.col("_lens")).alias("_min_len"),
-        F.array_max(F.col("_lens")).alias("_max_len"),
-    ).select(
-        "*",
-        F.size(F.filter(F.col("_lens"), lambda v: v == F.col("_min_len"))).alias("_n_min"),
-        F.size(F.filter(F.col("_lens"), lambda v: v == F.col("_max_len"))).alias("_n_max"),
+    x = _overlap_pass(
+        df, _CATEGORIZE, _CATEGORIZE, doc_col, start_col, end_col, text_col,
+        uri_col=uri_col,
     )
-
-    # last-assignment-wins chain (R/overlaps.R:444-477): longest > shortest >
-    # outer > inner > undetermined.
-    per_row = (
-        F.when((length == F.col("_max_len")) & (F.col("_n_max") == 1), "ovl_longest")
-        .when((length == F.col("_min_len")) & (F.col("_n_min") == 1), "ovl_shortest")
-        .when(F.col("_outer"), "ovl_outer")
-        .when(F.col("_inner"), "ovl_inner")
-        .otherwise("ovl_undetermined")
-    )
-    ovl_type = (
-        F.when(F.col("ovl_id").isNull(), F.lit(None).cast("string"))
-        .when((F.col("_n_span") == 1) & (F.col("_n_uri") > 1), "ovl_multiple")
-        .when(
-            ~F.col("_has_containment") & (F.col("_n_uri") == 1), "ovl_partial"
-        )
-        .when(
-            ~F.col("_has_containment") & (F.col("_n_uri") > 1),
-            "ovl_partial|ovl_distinct",
-        )
-        .otherwise(per_row)
-    )
-    x = x.withColumn("ovl_type", ovl_type)
-
     if experimental:
         x = _synthesize_inner_outer(
-            x, part, start_col=start_col, end_col=end_col, uri_col=uri_col,
-            text_col=text_col, span_unit=span_unit,
+            x, [doc_col] if doc_col else [], start_col=start_col, end_col=end_col,
+            uri_col=uri_col, text_col=text_col, span_unit=span_unit,
         )
-
-    for flag in OVL_FLAGS:
-        x = x.withColumn(
-            flag,
-            F.when(F.col("ovl_id").isNotNull(), F.col("ovl_type").contains(flag)),
-        )
-    helper = ["_n_uri", "_n_span", "_lens", "_inner", "_outer", "_min_len",
-              "_max_len", "_n_min", "_n_max", "_start_dup", "_has_containment"]
-    x = x.drop(*[c for c in helper if c in x.columns])
-    if not keep_type_col:
-        x = x.drop("ovl_type")
-    # the reference sorts for presentation (R/overlaps.R:391-395); a global
-    # range-partition sort mid-pipeline is wasted shuffle — results are
-    # order-insensitive, callers sort at the edge if needed.
-    return x
+    return _with_flags(x, keep_type_col)
 
 
 def _synthesize_inner_outer(
@@ -335,25 +220,17 @@ def overlap_pipeline(
     text_col: str = "text",
     uri_col: str = "dbpedia_uri",
 ) -> DataFrame:
-    """detect -> categorize -> resolve as ONE single-consumer chain.
+    """detect -> categorize -> resolve in ONE kernel pass.
 
-    Every stage is null-ovl_id-safe inline (see categorize_overlap /
-    resolve_overlap), so the upstream plan is consumed exactly once and
-    the whole family runs on the single doc-keyed exchange established by
-    ``detect_overlap`` — HashPartitioning(doc) satisfies every
-    (doc[, ovl_id])-clustered window downstream, so no further shuffle.
+    The upstream plan is consumed once, and the stages share the single
+    doc-keyed exchange and sort.
     """
-    detected = detect_overlap(
-        df, doc_col=doc_col, start_col=start_col, end_col=end_col, text_col=text_col
+    df, end_col = _with_end(df, start_col, end_col, text_col)
+    x = _overlap_pass(
+        df, _DETECT, _RESOLVE, doc_col, start_col, end_col, text_col,
+        uri_col=uri_col, keep=keep, omit=omit, tiebreak=tiebreak,
     )
-    categorized = categorize_overlap(
-        detected, doc_col=doc_col, start_col=start_col,
-        end_col=end_col or "end", uri_col=uri_col, text_col=text_col,
-    )
-    return resolve_overlap(
-        categorized, keep=keep, omit=omit, tiebreak=tiebreak, doc_col=doc_col,
-        start_col=start_col, end_col=end_col or "end", text_col=text_col,
-    )
+    return _with_flags(x, keep_type_col=False)
 
 
 def resolve_overlap(
@@ -384,99 +261,219 @@ def resolve_overlap(
     silently drops the whole group; we keep the best ``keep`` row, which is
     the documented intent of the API.
     """
-    part = [doc_col] if doc_col else []
-    # NULL-ovl_id rows are unconditionally kept (R/overlaps.R:563). Like
-    # categorize_overlap they stay INLINE — the winner expression below
-    # keeps them unconditionally, so no hit/miss split (which would
-    # execute the upstream plan twice) is needed; the (doc, NULL) window
-    # groups are bounded by a document's mention count.
-    # forward iteration => the LAST matching keep entry ends up outermost in
-    # the when-chain, so it wins (reference parity, R/overlaps.R:569-571).
-    keep_prio = F.lit(None).cast("int")
-    for i in range(len(keep)):
-        keep_prio = F.when(F.col(f"ovl_{keep[i]}"), F.lit(i + 1)).otherwise(keep_prio)
-    omitted = F.lit(False)
-    for o in omit or []:
-        omitted = omitted | F.coalesce(F.col(f"ovl_{o}"), F.lit(False))
-
-    x = df.withColumn(
-        "_keep", F.when(omitted, F.lit(-1)).otherwise(keep_prio)
+    return _overlap_pass(
+        df, _RESOLVE, _RESOLVE, doc_col, start_col, end_col, text_col,
+        keep=keep, omit=omit, tiebreak=tiebreak,
     )
-    grp = Window.partitionBy(*part, "ovl_id")
-    pos = F.when(F.col("_keep") > 0, F.col("_keep"))
-    # one window pass: collect the (non-null) priorities per group, derive
-    # min and the count-at-min from the tiny array — collect_list drops
-    # NULL entries exactly like min()/the null-skipping sum did.
-    x = (
-        x.withColumn("_poss", F.collect_list(pos).over(grp))
-        .withColumn("_pos_min", F.array_min(F.col("_poss")))
-        .withColumn(
-            "_n_at_min",
-            F.when(
-                F.col("_pos_min").isNotNull(),
-                F.size(F.filter(F.col("_poss"), lambda v: v == F.col("_pos_min"))),
-            ),
-        )
-        .drop("_poss")
-    )
-    # candidate set per the reference's tiebreak_fun (R/overlaps.R:590-619)
-    candidate = F.when(
-        F.col("_pos_min").isNull(), F.col("_keep").isNull()
-    ).otherwise(pos == F.col("_pos_min"))
-    x = x.withColumn("_cand", F.coalesce(candidate, F.lit(False)))
 
-    needs_tiebreak = F.col("_pos_min").isNull() | (F.col("_n_at_min") > 1)
-    if tiebreak == "first":
-        order = [F.col(start_col), F.col(end_col), F.col(text_col)]
-    elif tiebreak == "hash":
-        # md5-derived (not engine-native xxhash64) so the DuckDB oracle
-        # recomputes the identical tie winner bit-for-bit — same policy
-        # as every dedup hash in this repo.
-        order = [
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.col(start_col),
-                            F.col(end_col),
-                            F.col(text_col),
-                            F.col("ovl_id"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-        ]
-    elif tiebreak == "remove":
-        order = None
-    else:
+
+def _with_end(df, start_col, end_col, text_col):
+    if end_col is not None:
+        return df, end_col
+    if "end" in df.columns:
+        raise ValueError("end_col is NULL but a column named 'end' already "
+                         "exists (mirrors R/overlaps.R:50-56)")
+    return df.withColumn("end", F.col(start_col) + F.length(F.col(text_col))), "end"
+
+
+def _with_flags(x: DataFrame, keep_type_col: bool) -> DataFrame:
+    flags = [
+        F.when(F.col("ovl_id").isNotNull(), F.col("ovl_type").contains(f)).alias(f)
+        for f in OVL_FLAGS
+    ]
+    x = x.select("*", *flags)
+    return x if keep_type_col else x.drop("ovl_type")
+
+
+def _overlap_pass(df, first, last, doc_col, start_col, end_col, text_col,
+                  uri_col=None, keep=(), omit=None, tiebreak="first"):
+    """Runs the kernel's stages ``first..last`` over whole documents. A pass
+    that starts after detect takes the given ``ovl_id`` groups and sorts by
+    them ahead of (start, end, text); the uri, where known, completes the
+    order, so identical spans are labeled deterministically."""
+    omit = list(omit or [])
+    if last == _RESOLVE and tiebreak not in ("first", "hash", "remove"):
         raise ValueError(f"unknown tiebreak {tiebreak!r}")
-
-    if order is not None:
-        # sort-free selection: the tiebreak winner is the candidate row
-        # whose order key is the group-min (an unordered-frame min over
-        # the same grp spec — no extra sort pass, unlike the previous
-        # row_number window). The key is unique within a group — the
-        # linked table is keyed by (doc, start, text), so (start, end,
-        # text) repeats never — making "key == min" exactly "row_number
-        # == 1" under the same ordering.
-        sel_key = F.struct(*[c.alias(f"_k{i}") for i, c in enumerate(order)])
-        x = x.withColumn("_sel_key", sel_key).withColumn(
-            "_win_key", F.min(F.when(F.col("_cand"), sel_key)).over(grp)
-        )
-        winner = F.when(
-            needs_tiebreak,
-            F.col("_cand") & (F.col("_sel_key") == F.col("_win_key")),
-        ).otherwise(F.col("_cand"))
-    else:
-        winner = F.when(needs_tiebreak, F.lit(False)).otherwise(F.col("_cand"))
-
-    # NULL-ovl_id rows are kept unconditionally (no resolution applies)
-    winner = F.when(F.col("ovl_id").isNull(), F.lit(True)).otherwise(winner)
-    return x.filter(winner).drop(
-        "_keep", "_pos_min", "_n_at_min", "_cand", "_sel_key", "_win_key"
+    unknown = [k for k in [*keep, *omit] if f"ovl_{k}" not in OVL_FLAGS]
+    if unknown:
+        raise ValueError(f"unknown overlap flags {unknown}")
+    added = [c for c, stage in (("ovl_id", _DETECT), ("ovl_type", _CATEGORIZE))
+             if first <= stage <= last]
+    schema = StructType(df.schema.fields + [StructField(c, StringType()) for c in added])
+    keys = [doc_col] if doc_col else []
+    order = (keys + ([] if first == _DETECT else ["ovl_id"])
+             + [start_col, end_col, text_col] + ([uri_col] if uri_col else []))
+    kernel = functools.partial(
+        _kernel, first=first, last=last, doc=doc_col, start=start_col,
+        end=end_col, text=text_col, uri=uri_col, keep=list(keep), omit=omit,
+        tiebreak=tiebreak,
     )
+    parts = df.repartition(*keys) if keys else df.repartition(1)
+    return parts.sortWithinPartitions(*order).mapInArrow(
+        functools.partial(_whole_documents, kernel=kernel, doc=doc_col), schema
+    )
+
+
+def _whole_documents(batches, kernel, doc):
+    """Feeds ``kernel`` tables of whole documents: the rows of a batch's
+    last document are carried into the next batch, which may continue it."""
+    carry = []
+    for b in batches:
+        t = pa.Table.from_batches([*carry, b])
+        cut = int(np.flatnonzero(_changes(t.column(doc)))[-1]) if doc and t.num_rows else 0
+        if cut:
+            yield from kernel(t.slice(0, cut)).to_batches()
+        carry = t.slice(cut).to_batches()
+    if carry:
+        yield from kernel(pa.Table.from_batches(carry)).to_batches()
+
+
+def _changes(arr) -> np.ndarray:
+    """True where a value differs from the previous row's (row 0: True);
+    NULLs equal each other, as in Spark's grouping."""
+    out = np.ones(len(arr), dtype=bool)
+    if len(arr) > 1:
+        cur, prev = arr.slice(1), arr.slice(0, len(arr) - 1)
+        out[1:] = pc.or_(
+            pc.fill_null(pc.not_equal(cur, prev), False),
+            pc.not_equal(pc.is_null(cur), pc.is_null(prev)),
+        ).to_numpy(zero_copy_only=False)
+    return out
+
+
+def _running(v: np.ndarray, seg: np.ndarray, op) -> np.ndarray:
+    """Inclusive running ``op`` (np.maximum / np.minimum) restarting at each
+    segment of the non-decreasing ids ``seg``: offsetting every segment past
+    the previous ones' value range lets one accumulate serve all of them."""
+    if len(v) == 0:
+        return v
+    lo = v.min()
+    off = seg * (v.max() - lo + 1) * (-1 if op is np.minimum else 1)
+    return op.accumulate(v - lo + off) - off + lo
+
+
+def _ints(tbl: pa.Table, col: str) -> np.ndarray:
+    arr = tbl.column(col)
+    if arr.null_count:
+        raise ValueError(f"overlap column {col!r} has NULLs")
+    return arr.to_numpy().astype(np.int64)
+
+
+def _kernel(tbl, first, last, doc, start, end, text, uri, keep, omit, tiebreak):
+    n = tbl.num_rows
+    s, e = _ints(tbl, start), _ints(tbl, end)
+    dnew = _changes(tbl.column(doc)) if doc else np.arange(n) == 0
+    added = {}
+    if first == _DETECT:
+        # a row opens a group unless an earlier row of its document reaches it
+        pmax = _running(e, np.cumsum(dnew), np.maximum)
+        gnew = dnew.copy()
+        gnew[1:] |= s[1:] > pmax[:-1]
+        grp = np.cumsum(gnew) - 1
+        multi = np.flatnonzero(np.bincount(grp) >= 2)  # the groups with an id
+        gdoc = (np.cumsum(dnew) - 1)[gnew][multi]
+        k = np.arange(len(multi)) - np.searchsorted(gdoc, gdoc) + 1  # per document
+        prefix = [f"ovl_{'null' if d is None else d}_" for d in pc.cast(
+            tbl.column(doc).filter(pa.array(dnew)), pa.string()).to_pylist()] if doc else ["ovl_"]
+        names = np.full(grp[-1] + 1 if n else 0, None, dtype=object)
+        names[multi] = [f"{prefix[d]}{i}" for d, i in zip(gdoc, k)]
+        added["ovl_id"] = names[grp]
+        member = np.isin(grp, multi)
+    else:
+        ovl = tbl.column("ovl_id")
+        member = pc.is_valid(ovl).to_numpy(zero_copy_only=False)
+        gnew = _changes(ovl) | dnew
+    # member rows of the overlap groups; g numbers their groups 0..G-1
+    idx = np.flatnonzero(member)
+    gfirst = gnew[idx]
+    g = np.cumsum(gfirst) - 1
+    gstart = np.flatnonzero(gfirst)
+
+    if first <= _CATEGORIZE <= last:
+        code = _categorize(s[idx], e[idx], g, gfirst, gstart, tbl.column(uri).take(idx))
+        added["ovl_type"] = np.full(n, None, dtype=object)
+        added["ovl_type"][idx] = _TYPES[code]
+    for c, v in added.items():
+        tbl = tbl.append_column(c, pa.array(v, type=pa.string()))
+    if last < _RESOLVE or not len(idx):
+        return tbl
+
+    wanted = {f"ovl_{k}" for k in [*keep, *omit]}
+    if first == _RESOLVE:
+        flag = {f: pc.fill_null(tbl.column(f).take(idx), False).to_numpy(zero_copy_only=False)
+                for f in wanted}
+    else:
+        flag = {f: _TYPE_HAS[f][code] for f in wanted}
+    key = _hash_keys(s[idx], e[idx], tbl.column(text).take(idx).to_pylist(),
+                     tbl.column("ovl_id").take(idx).to_pylist()) if tiebreak == "hash" else None
+    keep_row = np.ones(n, dtype=bool)
+    keep_row[idx] = _resolve(flag, keep, omit, g, gstart, tiebreak == "remove", key)
+    return tbl.filter(pa.array(keep_row))
+
+
+def _categorize(s, e, g, gfirst, gstart, uris) -> np.ndarray:
+    """ovl_type code per member row (R/overlaps.R:402-479)."""
+    if not len(s):
+        return np.zeros(0, dtype=np.int64)
+    ln = e - s
+    # inner: an earlier row of the group ends at or after this row's end
+    inner = ~gfirst & (np.r_[0, _running(e, g, np.maximum)[:-1]] >= e)
+    # outer: a later row of the group ends at or before this row's end
+    later_min = _running(e[::-1], g[-1] - g[::-1], np.minimum)[::-1]
+    outer = ~np.r_[gfirst[1:], True] & (np.r_[later_min[1:], 0] <= e)
+    same_s = np.r_[False, s[1:] == s[:-1]] & ~gfirst
+    start_run = np.cumsum(~same_s) - 1
+    start_dup = np.bincount(start_run)[start_run] > 1
+    n_span = np.add.reduceat(~(same_s & np.r_[False, e[1:] == e[:-1]]), gstart, dtype=np.int64)[g]
+    # distinct non-NULL uris: unique (group, uri code) pairs, NULL coded 0
+    codes = pc.fill_null(uris.combine_chunks().dictionary_encode().indices, -1).to_numpy() + 1
+    width = int(codes.max()) + 1
+    pairs = np.unique(g * width + codes)
+    n_uri = np.bincount(pairs[pairs % width != 0] // width, minlength=len(gstart))[g]
+    min_len = np.minimum.reduceat(ln, gstart)[g]
+    max_len = np.maximum.reduceat(ln, gstart)[g]
+    n_min = np.add.reduceat(ln == min_len, gstart, dtype=np.int64)[g]
+    n_max = np.add.reduceat(ln == max_len, gstart, dtype=np.int64)[g]
+    has_cont = np.logical_or.reduceat(inner | start_dup, gstart)[g]
+    # the reference's label chain, first match wins (codes index _TYPES)
+    return np.select(
+        [(n_span == 1) & (n_uri > 1), ~has_cont & (n_uri == 1), ~has_cont & (n_uri > 1),
+         (ln == max_len) & (n_max == 1), (ln == min_len) & (n_min == 1), outer, inner],
+        np.arange(1, 8), 8,
+    )
+
+
+def _hash_keys(s, e, texts, ids) -> np.ndarray:
+    """md5 tie key of ``concat_ws('|', start, end, text, ovl_id)`` (NULLs
+    skipped): its first 8 hex digits as an integer, which the DuckDB
+    oracle recomputes bit for bit."""
+    return np.array([
+        int(hashlib.md5("|".join(str(p) for p in row if p is not None).encode()).hexdigest()[:8], 16)
+        for row in zip(s, e, texts, ids)
+    ], dtype=np.int64)
+
+
+def _resolve(flag, keep, omit, g, gstart, remove, key) -> np.ndarray:
+    """Winner mask over member rows (R/overlaps.R:558-638)."""
+    prio = np.zeros(len(g), dtype=np.int64)  # 0 = no keep flag
+    for i, k in enumerate(keep):  # the LAST matching keep entry wins
+        prio = np.where(flag[f"ovl_{k}"], i + 1, prio)
+    for o in omit:
+        prio = np.where(flag[f"ovl_{o}"], -1, prio)
+    none = len(keep) + 1
+    pos_min = np.minimum.reduceat(np.where(prio > 0, prio, none), gstart)
+    has_pos = pos_min < none
+    at_min = prio == pos_min[g]
+    needs = ~has_pos | (np.add.reduceat(at_min, gstart, dtype=np.int64) > 1)
+    # candidate set per the reference's tiebreak_fun (R/overlaps.R:590-619)
+    cand = np.where(has_pos[g], at_min, prio == 0)
+    win = cand & ~needs[g]
+    if not remove:
+        # one winner per tied group: the smallest key, then the earliest row
+        tied = np.flatnonzero(cand & needs[g])
+        top = np.iinfo(np.int64).max
+        rank = np.full(len(g), top)
+        rank[tied] = tied if key is None else (key[tied] << 31) | tied
+        best = np.minimum.reduceat(rank, gstart)
+        win[best[best < top] & ((1 << 31) - 1)] = True
+    return win

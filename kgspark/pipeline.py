@@ -6,14 +6,15 @@ documents(url, warc_ts, html, text, lang)
   -> spot (vectorized flat matcher, batch pandas UDF)
   -> stitch (pure filter)
   -> link (candidates x broadcast lexicon; prior + context scoring; top-1)
-  -> overlaps (detect/categorize/resolve — doc-local windows)
+  -> overlaps (detect/categorize/resolve — one per-document kernel)
   -> entity types (T2 expression)
   -> canonicalize (broadcast redirect/sameAs dims)
   -> triples (distinct + partitioned write)
 
 Shuffle census of the whole plan: ONE doc-keyed exchange shared by the
-top-1 link aggregation and the entire overlap window family
-(HashPartitioning(doc_id) satisfies both clustered distributions —
+top-1 link aggregation and the overlap kernel
+(HashPartitioning(doc_id) satisfies the aggregation's clustered
+distribution and the kernel's repartition(doc_id) —
 disambig.disambiguate(partition_by_doc=True)), one distinct for the
 triple set, plus the terminal write's ``REBALANCE`` on ``pred``, which AQE
 sizes from the data. Everything else is narrow.
@@ -158,10 +159,10 @@ def run_pipeline(
             min_support=cfg.min_support,
             confidence=cfg.confidence,
             types=cfg.types,
-            # one doc-keyed exchange serves the top-1 agg AND the whole
-            # overlap window family (faster in both A/Bs, BENCH/AB_PARTITION.json)
+            # one doc-keyed exchange serves the top-1 agg AND the
+            # overlap kernel (faster in both A/Bs, BENCH/AB_PARTITION.json)
             partition_by_doc=True,
-            # narrow rows through the cache + window family; the type
+            # narrow rows through the overlap kernel; the type
             # payload re-attaches once, post-resolution (attach_types) —
             # with a D6 type restriction the types must ride along for
             # the filter, so the narrow contract only applies without it.

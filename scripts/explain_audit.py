@@ -4,7 +4,7 @@ assert the structural properties the 100 TB design depends on:
 
 - parquet scans carry PushedFilters / pruned ReadSchema;
 - lexicon / dim joins are BroadcastHashJoin (never SMJ);
-- the overlap window family reuses ONE doc-keyed exchange;
+- the overlap kernel (detect+categorize+resolve) reuses ONE doc-keyed exchange;
 - the disambiguation top-1 is a hash aggregate (partial + final), no sort;
 - whole-stage codegen covers the relational stages.
 
@@ -79,14 +79,14 @@ def main() -> int:
     checks.append(("top-1 is partial+final aggregate", n_partial_final >= 2, p))
     checks.append(("no Window operator in disambiguate", "Window" not in p, p))
 
-    # 4. overlap family: the single-pass window stack
-    # (detect+categorize+resolve) must run on ONE doc-keyed exchange.
+    # 4. overlap kernel: detect+categorize+resolve in one mapInArrow pass
+    # must run on ONE doc-keyed exchange.
     p = plan_of(entrymod.q_resolve_overlap(spark, SF))
     sections.append(("overlaps detect+categorize+resolve", p))
-    n_window_exchanges = len(re.findall(r"hashpartitioning\(doc_id#\d+L?, \d+\)", p))
+    n_kernel_exchanges = len(re.findall(r"hashpartitioning\(doc_id#\d+L?, \d+\)", p))
     checks.append(
-        (f"overlap window family: one doc-keyed exchange (found {n_window_exchanges})",
-         n_window_exchanges == 1, p),
+        (f"overlap kernel: one doc-keyed exchange (found {n_kernel_exchanges})",
+         n_kernel_exchanges == 1, p),
     )
 
     # 5. canonicalization dims broadcast. Production feeds a PRE-CLOSED
@@ -165,7 +165,7 @@ def main() -> int:
                    all("shingles" not in s for s in band_exchange_schemas), p))
 
     # 12. pipeline link+overlaps: ONE doc-keyed exchange serves the top-1
-    # aggregation AND the whole overlap window family.
+    # aggregation AND the overlap kernel (its repartition(doc) is satisfied).
     from kgspark import disambig as _disambig, overlaps as _overlaps, segment as _segment
     _docs_pl = docs.select(
         F.col("doc_id").cast("string").alias("url"), "text"

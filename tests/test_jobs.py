@@ -3,6 +3,8 @@
 
 import json
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -78,6 +80,7 @@ def test_curate_job_no_mixture_no_pack(spark, curate_input, tmp_path):
 
 def test_curate_job_span_dedup_and_source_cap(spark, tmp_path):
     from jobs.curate import main
+    from kgspark.dedup import release_persisted
 
     def distinct_doc(i):
         return " ".join(f"w{i}x{j}" for j in range(60))
@@ -94,12 +97,16 @@ def test_curate_job_span_dedup_and_source_cap(spark, tmp_path):
     ).write.parquet(inp)
 
     out_dir = str(tmp_path / "curated3")
+    release_persisted()  # earlier callers' cached operator inputs
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     rc = main([
         "--input", inp, "--output", out_dir,
         "--max-dup-span-frac", "0.5", "--per-source-cap", "5",
         "--pack-budget", "0",
     ])
     assert rc == 0
+    # the job releases every frame it cached
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     manifest = json.loads(
         open(os.path.join(out_dir, "_curate_manifest.json")).read()
     )
@@ -111,6 +118,37 @@ def test_curate_job_span_dedup_and_source_cap(spark, tmp_path):
     counts = {r["source"]: r["count"] for r in out.groupBy("source").count().collect()}
     assert counts == {"s0": 5, "s1": 5}
     assert out.filter("doc_id >= 300").count() == 0
+
+
+def test_release_persisted_skips_a_stopped_context():
+    """A registry frame left by a stopped SparkContext (a later pass in the
+    same JVM) has nothing to release: release_persisted frees the current
+    context's frames and does not fail on the stale one. Runs in its own
+    process, since it stops a context."""
+    script = """
+from pyspark.sql import SparkSession
+from kgspark import dedup
+
+def session():
+    return (SparkSession.builder.master("local[1]")
+            .config("spark.ui.enabled", "false").getOrCreate())
+
+old = session()
+dedup._rotating_persist(old.range(10), "stale").count()
+old.stop()
+cur = session()
+dedup._rotating_persist(cur.range(5), "live").count()
+assert cur.sparkContext._jsc.getPersistentRDDs().size() == 1
+dedup.release_persisted()
+assert cur.sparkContext._jsc.getPersistentRDDs().size() == 0
+assert not dedup._PERSIST_REGISTRY
+cur.stop()
+"""
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
 
 
 def test_dedup_job_counts(spark, tmp_path, capsys):

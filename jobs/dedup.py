@@ -47,6 +47,8 @@ def main(argv: list[str] | None = None) -> int:
         lsh_bucket_stats,
         lsh_candidate_pairs,
         minhash_docs,
+        release_checkpoint,
+        release_persisted,
     )
     from kgspark.lineage import count_on_write, write_manifest
 
@@ -98,6 +100,8 @@ def main(argv: list[str] | None = None) -> int:
         )
         groups.write.mode("overwrite").parquet(args.output.rstrip("/") + "/groups")
         n_groups = obs_groups.get["n"] or 0
+        release_checkpoint(groups)
+    release_persisted()  # minhash_docs' cached shingle hashes
 
     summary = {
         "wall_sec": round(time.time() - t0, 1),

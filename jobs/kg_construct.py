@@ -131,6 +131,7 @@ def main(argv: list[str] | None = None) -> int:
 
         from pyspark.sql import functions as F
 
+        from kgspark.dedup import release_checkpoint
         from kgspark.pipeline import release_pipeline_caches
         from kgspark.warc import http_responses, read_warc_stream
 
@@ -158,6 +159,8 @@ def main(argv: list[str] | None = None) -> int:
             )
             out["triples"].write.mode("append").parquet(args.output)
             release_pipeline_caches(out)
+            if not cfg.redirects_preclosed:  # this batch's redirect closure
+                release_checkpoint(out["redirects_closed"])
             batches.append({"batch_id": batch_id, "stages": out["metrics"]})
 
         ckpt_root = args.checkpoint or args.output

@@ -5,70 +5,58 @@ The reference resolves DBpedia URIs to Wikidata via chunked live SPARQL
 (``R/wikidata.R:44-47,72-108``) and a keyed join back
 (``R/wikidata.R:334-337``). At 10^12 documents that is not a runtime
 operation: we materialize redirects/sameAs as static broadcast-sized
-dimension tables, close the redirect relation to a fixpoint *offline* (once,
-on the dim table — not per query), and canonicalize with two broadcast left
-joins in-plan (SURVEY §2.5 J9/J10).
+dimension tables, close the redirect relation *offline* (once, on the dim
+table — not per query) with the same connected-components fixpoint that
+builds the dedup groups (``dedup.connected_components``), and canonicalize
+with two broadcast left joins in-plan (SURVEY §2.5 J9/J10).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from kgspark.dedup import connected_components, release_checkpoint
 
-def close_redirects(redirects: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Transitive closure (src -> final dst) of the redirect relation,
-    by distributed path doubling: log2(longest chain) self-join rounds.
+
+def close_redirects(redirects: DataFrame) -> DataFrame:
+    """(src_uri, final dst_uri) for every redirect source whose chain ends.
+
+    Redirects are a function: a ``src_uri`` with several rows keeps its
+    minimum ``dst_uri``. In a functional graph every weakly connected
+    component holds exactly one sink (a ``dst_uri`` that is never a
+    ``src_uri``) or one cycle, so the closure maps each ``src_uri`` to the
+    sink of its component from ``connected_components``; a source in a
+    cycle component (a self-loop, a cycle, a chain into a cycle) finds no
+    sink and stays unredirected.
 
     This is an OFFLINE dim-build operator — run it once when the redirect
     dump refreshes, persist the closed table (``write_closed_redirects``)
     and feed the pipeline the pre-closed dim. It never collects to the
-    driver: real DBpedia redirect dumps are ~7-10M edges, hundreds of MB
-    that should not round-trip through the driver on every pipeline run
-    (the round-1 design did exactly that — fixed per VERDICT.md).
+    driver: real DBpedia redirect dumps are ~7-10M edges.
 
-    Each round is persisted before the convergence probe — without it the
-    probe's limit(1).count() re-executes every prior round's join
-    (quadratic recomputation, deep-plan risk).
-
-    The returned DataFrame IS persisted (its plan is the full round
-    stack — unpersisting here would make every consumer recompute the
-    closure). The caller owns the release: ``write_closed_redirects``
-    unpersists after the parquet write, and ``run_pipeline`` unpersists
-    after its checkpointed canonicalize stage (or hands the handle back
-    as ``out["redirects_closed"]`` in lazy mode).
+    The result reads two ``localCheckpoint``s (the functional edges and
+    the components); the caller frees them with
+    ``dedup.release_checkpoint`` once the result has been consumed.
     """
-    closed = redirects.select("src_uri", "dst_uri").persist()
-    for _ in range(max_iter):
-        # one join execution per round: materialize the joined frame once
-        # (with an _advanced marker), then probe convergence and derive the
-        # next round from the CACHE — the previous shape executed the
-        # self-join twice per round (once under the limit(1) probe, once
-        # to materialize the next round's persist)
-        nxt = closed.alias("a").join(
-            closed.alias("b"), F.col("a.dst_uri") == F.col("b.src_uri"), "left"
-        ).select(
-            F.col("a.src_uri").alias("src_uri"),
-            F.coalesce(F.col("b.dst_uri"), F.col("a.dst_uri")).alias("dst_uri"),
-            F.col("b.dst_uri").isNotNull().alias("_advanced"),
-        ).persist()
-        nxt.count()  # the single join execution of this round
-        if nxt.filter(F.col("_advanced")).limit(1).count() == 0:
-            nxt.unpersist()
-            break
-        prev = closed
-        closed = nxt.select("src_uri", "dst_uri").persist()
-        closed.count()  # cache-to-cache copy, then release the marker frame
-        nxt.unpersist()
-        prev.unpersist()
-    return closed
+    fn = redirects.groupBy("src_uri").agg(F.min("dst_uri").alias("dst_uri"))
+    fn = fn.localCheckpoint(eager=False)
+    comp = connected_components(fn, "src_uri", "dst_uri")
+    sinks = comp.join(fn, comp["node"] == fn["src_uri"], "left_anti").select(
+        "component", F.col("node").alias("dst_uri")
+    )
+    return (
+        comp.join(sinks, "component")
+        .where(F.col("node") != F.col("dst_uri"))
+        .select(F.col("node").alias("src_uri"), "dst_uri")
+    )
 
 
-def write_closed_redirects(redirects: DataFrame, path: str, max_iter: int = 20) -> None:
-    """Offline dim refresh: close the relation and persist it for every
-    subsequent pipeline run to consume pre-closed."""
-    closed = close_redirects(redirects, max_iter=max_iter)
+def write_closed_redirects(redirects: DataFrame, path: str) -> None:
+    """Offline dim refresh: close the relation (``close_redirects``) and
+    write it for every subsequent pipeline run to consume pre-closed."""
+    closed = close_redirects(redirects)
     closed.write.mode("overwrite").parquet(path)
-    closed.unpersist()
+    release_checkpoint(closed)
 
 
 def canonicalize(

@@ -65,16 +65,6 @@ def _category_expr(
     ).otherwise(joined)
 
 
-def entity_types_map_column(
-    col: Column, mapping: list[tuple[str, str]], other: str = "MISC"
-) -> Column:
-    """Character-vector method (R/entity_types.R:110-151).
-
-    ``mapping`` is ``[(category, type)]`` — the named-vector pairs.
-    """
-    return _category_expr(col, mapping, other)
-
-
 def entity_types_map(
     df: DataFrame,
     mapping: list[tuple[str, str]],

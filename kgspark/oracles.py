@@ -722,7 +722,8 @@ def q_dedup_components(k: int = 16, bands: int = 4, threshold: float = 0.5,
                        char_mode: bool = False, shingle_n: int = 3) -> str:
     """Connected components over the MinHash-verified pairs: min reachable
     node id == component minimum (undirected reachability via a recursive
-    CTE — the oracle twin of the distributed min-label propagation)."""
+    CTE — the twin of min-label propagation: ``dedup.connected_components``
+    reaches the same fixpoint, with hooking and pointer jumping)."""
     return (
         "WITH RECURSIVE "
         + _minhash_sql(k, char_mode, shingle_n)

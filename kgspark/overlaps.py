@@ -250,7 +250,8 @@ def resolve_overlap(
     matching entry — the reference's assignment loop overwrites
     ``ovl_keep := i`` on every pass (R/overlaps.R:569-571) — and the
     group winner is the row with the smallest priority. ``tiebreak``:
-    ``first`` (row order — deterministic (start, end, text) sort),
+    ``first`` (row order — deterministic (start, end, text) sort, completed
+    by ``dbpedia_uri`` when the frame has it, as on the pipeline path),
     ``hash`` (deterministic salted replacement for the reference's
     ``sample()``, R/overlaps.R:606-608, so reruns are byte-stable), or
     ``remove`` (drop unresolved groups).
@@ -263,6 +264,7 @@ def resolve_overlap(
     """
     return _overlap_pass(
         df, _RESOLVE, _RESOLVE, doc_col, start_col, end_col, text_col,
+        uri_col="dbpedia_uri" if "dbpedia_uri" in df.columns else None,
         keep=keep, omit=omit, tiebreak=tiebreak,
     )
 

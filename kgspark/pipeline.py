@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from kgspark import canonicalize as canon
 from kgspark import disambig, entity_types, overlaps, segment, spot, triples
 from kgspark.automaton import write_lexicon_artifact
+from kgspark.dedup import release_checkpoint
 from kgspark.extract import extract_text
 from kgspark.lineage import StageRunner, _hadoop_fs
 
@@ -200,11 +201,11 @@ def run_pipeline(
     )
     if runner.enabled and not cfg.redirects_preclosed:
         # canonicalize was materialized to parquet (lineage cut), so the
-        # closure's cached rounds are no longer reachable — release them
-        # instead of leaking a cached dim per pipeline run. In lazy mode
-        # the cache must outlive this call; it is exposed as
-        # out["redirects_closed"] and the caller owns the unpersist.
-        redirects_closed.unpersist()
+        # closure's checkpoints are no longer read — release them instead
+        # of leaking a dim per pipeline run. In lazy mode they must outlive
+        # this call; the closure is exposed as out["redirects_closed"] and
+        # the caller owns the release_checkpoint.
+        release_checkpoint(redirects_closed)
 
     triple_df = runner.run("triples", lambda: triples.mentions_to_triples(canonical))
 

@@ -49,103 +49,6 @@ def sessionize(
     )
 
 
-SESSION_OUT_SCHEMA = (
-    "user_id long, session_id string, n_events long, "
-    "session_start long, session_end long, total_value double"
-)
-SESSION_STATE_SCHEMA = "sess_n long, start long, last long, n long, total double"
-
-
-def streaming_sessionize(
-    events_stream: DataFrame,
-    gap_minutes: int = 30,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Custom stateful streaming operator: gap-based sessionization via
-    ``applyInPandasWithState`` (the stream-native twin of ``sessionize``).
-
-    Per user the state holds the open session (counter, start, last event
-    time, aggregates); a batch's events extend or close it — closed
-    sessions are emitted with the same ``user-sessN`` ids and aggregate
-    columns as the batch operator, and the open session survives in the
-    state store across micro-batches (checkpoint-durable, so an
-    incremental crawl resumes mid-session). Idle users are flushed by an
-    EVENT-TIME TIMEOUT: each update arms a timeout at ``last + gap``;
-    once the watermark (event time minus ``watermark_delay``) passes it,
-    the open session is emitted and the state removed — a user who stops
-    producing events still gets their final session, without waiting for
-    a later event of theirs to close it.
-    """
-    import pandas as pd
-
-    gap_sec = gap_minutes * 60
-    out_cols = ["user_id", "session_id", "n_events",
-                "session_start", "session_end", "total_value"]
-
-    def fn(key, pdfs, state):
-        user_id = key[0]
-        if state.hasTimedOut:
-            sess_n, start, last, n, total = state.get
-            state.remove()
-            if start is not None:
-                yield pd.DataFrame(
-                    [(user_id, f"{user_id}-{sess_n}", n, start, last,
-                      round(total, 6))],
-                    columns=out_cols,
-                )
-            return
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts_sec", "event_id"])
-        if state.exists:
-            sess_n, start, last, n, total = state.get
-        else:
-            sess_n, start, last, n, total = (1, None, None, 0, 0.0)
-        out = []
-        for ts, val in zip(rows["ts_sec"], rows["value"]):
-            ts, val = int(ts), float(val)
-            if start is None:
-                start, last, n, total = ts, ts, 1, val
-            elif ts - last > gap_sec:
-                out.append((user_id, f"{user_id}-{sess_n}", n, start, last,
-                            round(total, 6)))
-                sess_n += 1
-                start, last, n, total = ts, ts, 1, val
-            else:
-                last, n, total = ts, n + 1, total + val
-        state.update((sess_n, start, last, n, total))
-        if last is not None:
-            # Arm the idle-flush: fire when the watermark passes
-            # last + gap. Spark rejects a timeout at/below the current
-            # watermark, so clamp (the session then flushes on the very
-            # next micro-batch — it is already older than the gap).
-            timeout_ms = (last + gap_sec) * 1000
-            state.setTimeoutTimestamp(
-                max(timeout_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    prepared = (
-        events_stream.select(
-            "event_id",
-            "user_id",
-            "value",
-            F.col("ts").cast("timestamp_ltz").alias("ts_ltz"),
-        )
-        .withWatermark("ts_ltz", watermark_delay)
-        .withColumn("ts_sec", F.col("ts_ltz").cast("long"))
-    )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=SESSION_OUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 DEDUP_STATE_SCHEMA = "seen long"
 
 

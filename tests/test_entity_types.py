@@ -1,11 +1,12 @@
 """Golden scenarios from tests/testthat/test-entity_types_map.R."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from kgspark.entity_types import entity_types_map, entity_types_map_column
+from kgspark.entity_types import entity_types_map
 
-MAPPING_CHR = [("PERSON", "Person"), ("ORGANIZATION", "Organisation"), ("LOCATION", "Place")]
+# the reference's character-vector goldens, as single-KB (DBpedia) mappings
+MAPPING_CHR = [("PERSON", "DBpedia:Person"), ("ORGANIZATION", "DBpedia:Organisation"),
+               ("LOCATION", "DBpedia:Place")]
 
 
 def test_character_method_berlin_golden(spark):
@@ -14,23 +15,21 @@ def test_character_method_berlin_golden(spark):
         [("|Place|Location|City|",), ("|MusicalWork|",), ("|Place|Location|Country|",)],
         ["DBpedia_type"],
     )
-    out = df.withColumn(
-        "category", entity_types_map_column(F.col("DBpedia_type"), MAPPING_CHR)
-    )
+    out = entity_types_map(df, MAPPING_CHR)
     assert [r["category"] for r in out.collect()] == ["LOCATION", "MISC", "LOCATION"]
 
 
 def test_na_input_maps_to_other(spark):
     df = spark.createDataFrame([(None,)], "DBpedia_type string")
-    out = df.withColumn("category", entity_types_map_column(F.col("DBpedia_type"), MAPPING_CHR))
+    out = entity_types_map(df, MAPPING_CHR)
     assert out.collect()[0]["category"] == "MISC"
 
 
 def test_multiple_matches_sorted_and_joined(spark):
     # two categories matched within one row: sorted alphabetically, pipe-joined
-    mapping = [("LEGISLATURE", "Legislature"), ("ORGANIZATION", "Organisation")]
+    mapping = [("LEGISLATURE", "DBpedia:Legislature"), ("ORGANIZATION", "DBpedia:Organisation")]
     df = spark.createDataFrame([("|Organisation|Legislature|",)], ["DBpedia_type"])
-    out = df.withColumn("category", entity_types_map_column(F.col("DBpedia_type"), mapping))
+    out = entity_types_map(df, mapping)
     assert out.collect()[0]["category"] == "LEGISLATURE|ORGANIZATION"
 
 

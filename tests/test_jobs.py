@@ -154,8 +154,10 @@ cur.stop()
 def test_dedup_job_counts(spark, tmp_path, capsys):
     """The dedup summary's counts, taken on the writes, equal the written
     output, and the manifest records the printed summary. A corpus with
-    no near-duplicates writes empty pairs/groups and still returns."""
+    no near-duplicates writes empty pairs/groups and still returns. The
+    job leaves no cached frame or checkpoint behind."""
     from jobs.dedup import main
+    from kgspark.dedup import release_persisted
 
     singletons = [
         (30 + i, f"singleton {i} " + " ".join(f"s{i}w{j}" for j in range(10)))
@@ -172,7 +174,10 @@ def test_dedup_job_counts(spark, tmp_path, capsys):
         spark.createDataFrame(rows, "doc_id long, text string").write.parquet(inp)
         out_dir = str(tmp_path / f"dedup-{name}")
         capsys.readouterr()
+        release_persisted()  # earlier callers' cached operator inputs
+        persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
         assert main(["--input", inp, "--output", out_dir, "--groups"]) == 0
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted, name
         summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
         pairs = spark.read.parquet(os.path.join(out_dir, "pairs"))

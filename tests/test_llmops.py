@@ -135,18 +135,6 @@ def test_connected_components_chain_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
-def test_connected_components_raises_when_not_converged(spark):
-    """An 8-node path needs more than 2 propagation rounds: the partial
-    labels would split the group, so the call fails instead."""
-    from kgspark.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 8)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge in 2 iterations"):
-        connected_components(pairs, max_iter=2)
-
-
 def test_connected_components_order_insensitive(spark):
     from kgspark.dedup import connected_components
 

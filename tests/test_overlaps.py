@@ -225,3 +225,21 @@ def test_resolve_last_matching_keep_entry_wins(spark):
     )
     out = resolve_overlap(df, keep=["outer", "partial"], tiebreak="first")
     assert [r["text"] for r in out.collect()] == ["Crude oil"]
+
+
+def test_resolve_alone_identical_spans_survivor_independent_of_order(spark):
+    """Identical spans with different URIs tie on (start, end, text); the
+    uri completes the sort, so the survivor does not depend on the input
+    order or its partitioning."""
+    rows = [("d1", 1, "Gore", "dbr:Al_Gore"), ("d1", 1, "Gore", "dbr:Gore_(band)"),
+            ("d1", 1, "Gore", "dbr:Gore,_Oklahoma"), ("d2", 7, "oil", "dbr:Oil"),
+            ("d2", 7, "oil", "dbr:Petroleum")]
+    categorized = categorize_overlap(detect_overlap(spark.createDataFrame(rows, COLS)))
+    schema, ordered = categorized.schema, categorized.collect()
+    survivors = set()
+    for order in (ordered, ordered[::-1]):
+        for n in (1, 7):
+            df = spark.createDataFrame(order, schema).repartition(n)
+            out = resolve_overlap(df, keep=["longest"], tiebreak="first")
+            survivors.add(tuple(sorted((r["doc_id"], r["dbpedia_uri"]) for r in out.collect())))
+    assert survivors == {(("d1", "dbr:Al_Gore"), ("d2", "dbr:Oil"))}

@@ -181,12 +181,16 @@ def test_lexicon_artifact_reused_not_rewritten(spark, tmp_path):
 
 def test_release_pipeline_caches_empties_cache_manager(spark):
     """Benchmark contract: after release_pipeline_caches, no pipeline cache
-    survives to be plan-matched by a later pass (redirects pre-closed so no
-    closure cache is in play either)."""
+    survives to be plan-matched by a later pass. The pipeline persists
+    nothing itself, so the test caches the shared frames as a caller
+    might; the closure's checkpoints are not in the CacheManager and are
+    released on their own."""
     from kgspark.pipeline import release_pipeline_caches
     from kgspark.canonicalize import close_redirects
+    from kgspark.dedup import release_checkpoint
 
     spark.catalog.clearCache()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     docs = synth.golden_documents(spark)
     rd_closed = close_redirects(synth.redirects_df(spark))
     out = run_pipeline(
@@ -194,12 +198,15 @@ def test_release_pipeline_caches_empties_cache_manager(spark):
         synth.sameas_df(spark),
         PipelineConfig(redirects_preclosed=True),
     )
+    out["documents"].persist()
+    out["mentions"].persist()
     out["triples"].count()
     cm = spark._jsparkSession.sharedState().cacheManager()
     assert not cm.isEmpty()  # docs + mentions caches are live mid-pass
     release_pipeline_caches(out)
-    rd_closed.unpersist()  # close_redirects' fixpoint cache, caller-owned
     assert cm.isEmpty()
+    release_checkpoint(rd_closed)  # close_redirects' checkpoints, caller-owned
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_triples_deterministic_across_runs(spark):

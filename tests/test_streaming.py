@@ -29,117 +29,6 @@ def test_streaming_doc_counts_available_now(spark, tmp_path):
     assert "en" in langs
 
 
-def test_streaming_sessionize_stateful_across_batches(spark, tmp_path):
-    """applyInPandasWithState sessionization: sessions close on gap within
-    a batch AND across micro-batches (state survives via the checkpoint —
-    the incremental-crawl resume story)."""
-    import pandas as pd
-
-    ev_dir = str(tmp_path / "events")
-    ck_dir = str(tmp_path / "ck")
-    out_dir = str(tmp_path / "sessions")
-
-    def write_batch(rows):
-        pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id", "value"])
-        pdf["ts"] = pd.to_datetime(pdf["ts"], utc=True)
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(ev_dir)
-
-    def run_once():
-        from kgspark.streaming import streaming_sessionize
-
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, value double"
-        ).parquet(ev_dir)
-        # file sink (not memory): it supports checkpoint recovery, which is
-        # exactly the cross-batch state story under test
-        q = (
-            streaming_sessionize(stream, gap_minutes=30)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-        return {r["session_id"]: r for r in spark.read.parquet(out_dir).collect()}
-
-    # batch 1: session A (2 events), then a gap, session B opens (stays in state)
-    write_batch([
-        (1, "2026-01-01 00:00", 7, 1.0),
-        (2, "2026-01-01 00:10", 7, 2.0),
-        (3, "2026-01-01 02:00", 7, 3.0),
-    ])
-    rows = run_once()
-    assert set(rows) == {"7-1"}
-    assert rows["7-1"]["n_events"] == 2 and rows["7-1"]["total_value"] == 3.0
-
-    # batch 2: a far-future event closes session B (opened in batch 1)
-    write_batch([(4, "2026-01-01 05:00", 7, 4.0)])
-    rows = run_once()
-    assert "7-2" in rows
-    assert rows["7-2"]["n_events"] == 1 and rows["7-2"]["total_value"] == 3.0
-
-
-def test_streaming_sessionize_idle_timeout_flush(spark, tmp_path):
-    """Event-time timeout: a user who STOPS producing events still gets
-    their open session emitted once the watermark (advanced by OTHER
-    users' events) passes last + gap."""
-    import pandas as pd
-
-    ev_dir = str(tmp_path / "events")
-    ck_dir = str(tmp_path / "ck")
-    out_dir = str(tmp_path / "sessions")
-
-    def write_batch(rows):
-        pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id", "value"])
-        pdf["ts"] = pd.to_datetime(pdf["ts"], utc=True)
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(ev_dir)
-
-    def run_once():
-        from kgspark.streaming import streaming_sessionize
-
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, value double"
-        ).parquet(ev_dir)
-        q = (
-            streaming_sessionize(stream, gap_minutes=30)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-        return {r["session_id"]: r for r in spark.read.parquet(out_dir).collect()}
-
-    # user 7 produces two events, then goes idle forever
-    write_batch([
-        (1, "2026-01-01 00:00", 7, 1.0),
-        (2, "2026-01-01 00:10", 7, 2.0),
-    ])
-    assert run_once() == {}  # session open, nothing closed yet
-
-    # user 8's event advances the watermark to 04:50 > 00:40 (= 7's
-    # last + gap): the armed event-time timeout fires (Spark's trailing
-    # no-data micro-batch commits the new watermark within the same
-    # availableNow run) and 7's idle session is emitted — even though
-    # user 7 never produced another event
-    write_batch([(3, "2026-01-01 05:00", 8, 9.0)])
-    rows = run_once()
-    assert "7-1" in rows
-    assert rows["7-1"]["n_events"] == 2 and rows["7-1"]["total_value"] == 3.0
-    # user 8's own session stays open (no watermark past ITS last + gap)
-    assert all(not k.startswith("8-") for k in rows)
-
-
 def test_streaming_dedup_across_batches(spark, tmp_path):
     """streaming_dedup emits each content fingerprint once — duplicates are
     dropped within a batch AND across micro-batches (state survives via

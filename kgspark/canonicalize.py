@@ -39,6 +39,8 @@ def close_redirects(redirects: DataFrame) -> DataFrame:
     ``dedup.release_checkpoint`` once the result has been consumed.
     """
     fn = redirects.groupBy("src_uri").agg(F.min("dst_uri").alias("dst_uri"))
+    # filled by the components' first job; the sink join reads it again
+    # instead of the input, and release_checkpoint frees it with them
     fn = fn.localCheckpoint(eager=False)
     comp = connected_components(fn, "src_uri", "dst_uri")
     sinks = comp.join(fn, comp["node"] == fn["src_uri"], "left_anti").select(

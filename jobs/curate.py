@@ -104,7 +104,7 @@ def main(argv: list[str] | None = None) -> int:
     cached = [kept]  # released once the write's Observations are read
 
     # --- stage 2: exact dedup — keep the min-id representative ---
-    from kgspark.dedup import exact_duplicates, release_persisted
+    from kgspark.dedup import exact_duplicates
 
     reps = exact_duplicates(kept, id_col=args.id_col, text_col=args.text_col)
     deduped = kept.join(
@@ -210,7 +210,6 @@ def main(argv: list[str] | None = None) -> int:
         manifest["n_after_source_cap"] = obs_cap.get["n"]
     for df in cached:
         df.unpersist()
-    release_persisted()  # dup_ngram_spans' gram stream
     write_manifest(spark, f"{args.output}/_curate_manifest.json", manifest)
     print(json.dumps(manifest))
     return 0

@@ -48,7 +48,6 @@ def main(argv: list[str] | None = None) -> int:
         lsh_candidate_pairs,
         minhash_docs,
         release_checkpoint,
-        release_persisted,
     )
     from kgspark.lineage import count_on_write, write_manifest
 
@@ -58,10 +57,11 @@ def main(argv: list[str] | None = None) -> int:
 
     t0 = time.time()
     docs = spark.read.parquet(args.input)
+    # the bucket stats and the pair write both read the signatures
     sigs = minhash_docs(
         docs, args.id_col, args.text_col, k=args.k,
         shingle_words=args.shingle_words, char_mode=args.char_mode,
-    )
+    ).persist()
     rows_per_band = args.k // args.bands
 
     # Cap audit first (one cheap action on the aggregated bucket frame):
@@ -101,7 +101,7 @@ def main(argv: list[str] | None = None) -> int:
         groups.write.mode("overwrite").parquet(args.output.rstrip("/") + "/groups")
         n_groups = obs_groups.get["n"] or 0
         release_checkpoint(groups)
-    release_persisted()  # minhash_docs' cached shingle hashes
+    sigs.unpersist()
 
     summary = {
         "wall_sec": round(time.time() - t0, 1),

@@ -24,48 +24,10 @@ the cap is the real bound.
 
 from __future__ import annotations
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 from pyspark.sql.types import StructField, StructType
 
 from kgspark.textops import fingerprint, tokens
-
-# Bounded persist registry: double-consumer operators (minhash signatures,
-# dup-ngram gram streams) persist an intermediate so the expensive
-# projection runs once per query. Spark's CacheManager already dedups
-# identical plans (re-invocations share ONE cache entry), but a call with
-# DIFFERENT inputs would strand the previous entry until LRU eviction —
-# the round-5 verdict's leak. The registry keeps at most one cached frame
-# per operator key: a semantically new plan unpersists its predecessor.
-_PERSIST_REGISTRY: dict[str, DataFrame] = {}
-
-
-def _rotating_persist(df: DataFrame, key: str) -> DataFrame:
-    prev = _PERSIST_REGISTRY.get(key)
-    if prev is not None:
-        try:
-            same = prev.sameSemantics(df)
-        except Exception:  # session of prev is gone — drop the handle
-            same = False
-        if not same:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
-    _PERSIST_REGISTRY[key] = df
-    return df.persist()
-
-
-def release_persisted() -> None:
-    """Unpersists every frame the registry holds — for a job whose last
-    action has run. A frame left by a stopped context holds nothing, and
-    unpersisting it fails in the JVM."""
-    for df in _PERSIST_REGISTRY.values():
-        try:
-            df.unpersist()
-        except Py4JJavaError:
-            pass
-    _PERSIST_REGISTRY.clear()
 
 
 def release_checkpoint(df: DataFrame) -> None:
@@ -97,33 +59,40 @@ def _hash64_expr(s):
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
 
 
-def word_shingles(text_col, n: int = 3):
-    """Distinct n-word shingles.
+def _word_ngrams(toks, n: int):
+    """Every n-word window of ``toks`` in order, space-joined: element i is
+    the window starting at token i+1, and a row with fewer than n tokens
+    gets an empty array.
 
-    Built with zip_with over shifted slices, NOT index lambdas: a lambda
-    body that references the outer token array (``element_at(split(...),
-    i)``) re-evaluates the split per element in Spark's interpreted
-    higher-order functions — quadratic in document length. zip_with/slice
-    evaluate their array children exactly once per row.
+    ``toks`` must be a projected column, not the tokenizing expression:
+    every slice and size below reads it, and an inline ``split`` would run
+    once per read (2n - 1 times a row). zip_with evaluates its array
+    children once per row, where an index lambda's body runs once per
+    element, so the cost is linear in document length.
     """
-    toks = tokens(text_col)
     sh = toks
     for j in range(1, n):
         shifted = F.slice(toks, j + 1, F.greatest(F.size(toks) - j, F.lit(0)))
         sh = F.zip_with(sh, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    # zip_with pads the tail with nulls -> partial shingles; cut them off.
-    return F.array_distinct(
-        F.slice(sh, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0)))
-    )
+    # zip_with pads the tail with nulls -> partial windows; cut them off.
+    return F.slice(sh, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0)))
 
 
-def char_ngrams(text_col, n: int = 3):
-    t = F.lower(text_col)
+def word_shingles(toks, n: int = 3):
+    """Distinct n-word shingles of a projected token-array column."""
+    return F.array_distinct(_word_ngrams(toks, n))
+
+
+def char_ngrams(t, n: int = 3):
+    """Distinct n-character shingles of a projected string column (the
+    caller lowercases it). A text shorter than n has none:
+    ``F.sequence(1, k)`` with k <= 0 counts down, so it is guarded."""
+    n_windows = F.length(t) - (n - 1)
     return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(t) - (n - 1), F.lit(0))),
-            lambda i: t.substr(i, F.lit(n)),
-        )
+        F.when(
+            n_windows >= 1,
+            F.transform(F.sequence(F.lit(1), n_windows), lambda i: t.substr(i, F.lit(n))),
+        ).otherwise(F.array().cast("array<string>"))
     )
 
 
@@ -160,23 +129,33 @@ def minhash_docs(
     shingle_words: int = 3,
     char_mode: bool = False,
 ) -> DataFrame:
-    """(doc_id, shingles, sig).
+    """(doc_id, shingles, sig) for every document with at least one shingle.
 
-    The md5-hashed shingles are persisted before the k permutations —
-    Catalyst's projection collapse would otherwise inline the md5 into
-    every permutation lambda and hash each shingle k times.
+    Tokens (or the lowercased text) are one projection and each later step
+    another: Catalyst keeps a projection whose column the next one reads
+    more than once, so the plan splits each text once and hashes each
+    shingle once, not once per permutation. The result is not cached; a
+    caller that reads it twice persists it.
+
+    Documents without shingles are dropped by a filter on the raw text: a
+    filter on a projected column is pushed below the projection and
+    computes it a second time. A text has one token more than whitespace
+    runs (``split`` keeps empty edge tokens). ``lower`` never shortens a
+    text, so filtering on ``length(text)`` differs only for a text shorter
+    than n whose lowercase is longer (U+0130).
     """
-    sh = (
-        char_ngrams(F.col(text_col), shingle_words)
-        if char_mode
-        else word_shingles(F.col(text_col), shingle_words)
-    )
+    text = F.col(text_col)
+    if char_mode:
+        units, n_units, ngrams = F.lower(text), F.length(text), char_ngrams
+    else:
+        units, n_units = tokens(text), F.regexp_count(text, F.lit(r"\s+")) + 1
+        ngrams = word_shingles
     hashed = (
-        df.select(F.col(id_col).alias("doc_id"), sh.alias("shingles"))
-        .filter(F.size("shingles") > 0)
+        df.filter(n_units >= shingle_words)
+        .select(F.col(id_col).alias("doc_id"), units.alias("units"))
+        .select("doc_id", ngrams(F.col("units"), shingle_words).alias("shingles"))
         .withColumn("sh_hash", F.transform(F.col("shingles"), _hash64_expr))
     )
-    hashed = _rotating_persist(hashed, "minhash_docs.hashed")
     return hashed.withColumn("sig", minhash_signature(F.col("sh_hash"), k)).drop(
         "sh_hash"
     )
@@ -248,8 +227,8 @@ def lsh_candidate_pairs(
       dropped-bucket count for lineage.
     - **Id-only shuffle**: the band self-join carries (doc_id, band_id,
       band_key) rows — never the shingle arrays. Shingles are re-attached
-      to the (few) surviving candidate pairs from the persisted signature
-      frame, so the wide payload rides a join keyed on 8-byte doc ids with
+      to the (few) surviving candidate pairs from the signature frame, so
+      the wide payload rides a join keyed on 8-byte doc ids with
       pair-count cardinality, not the bands×docs exchange.
     """
     banded = _banded(sigs, bands, rows_per_band)
@@ -339,12 +318,16 @@ def contamination(
     Shingles are compared as strings (exact, oracle-mirrorable); at 10^12
     docs you would hash them first (dedup.minhash_docs has the md5-hash
     kernel) — same plan shape, 8-byte keys."""
-    base = df.select(
-        F.col(id_col), word_shingles(F.col(text_col), n).alias("sh")
+    base = df.select(F.col(id_col), tokens(F.col(text_col)).alias("toks")).select(
+        id_col, word_shingles(F.col("toks"), n).alias("sh")
     ).withColumn("n_shingles", F.size("sh"))
-    doc_sh = base.select(id_col, "n_shingles", F.explode("sh").alias("shingle"))
-    bench_sh = benchmark.select(
-        F.explode(word_shingles(F.col(bench_text_col), n)).alias("shingle")
+    # explode_outer: an inner explode of a column makes Catalyst add a
+    # size(sh) > 0 filter below the projection, which would rebuild the
+    # shingles from the text; a doc without shingles gets a null shingle,
+    # which the join drops.
+    doc_sh = base.select(id_col, "n_shingles", F.explode_outer("sh").alias("shingle"))
+    bench_sh = benchmark.select(tokens(F.col(bench_text_col)).alias("toks")).select(
+        F.explode(word_shingles(F.col("toks"), n)).alias("shingle")
     ).distinct()
     return (
         doc_sh.join(F.broadcast(bench_sh), "shingle")
@@ -561,48 +544,26 @@ def dup_ngram_spans(
     duplicated n-gram starts merged into the span. Two n-grams merge when
     their windows overlap or touch (start <= prev_start + n).
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: F.length(t) > 0
-    )
     # 60-bit md5 prefix, not the 32-bit `_hash64_expr`: a crawl shard with
     # ~10^6 distinct n-grams would see dozens of birthday collisions at 32
     # bits — each one a FALSE duplicated span. 15 hex digits (< 2^60) keeps
     # the expected collision count negligible at 10^9 n-grams per shard.
     ngram_hash = lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-    # Guard the window count: F.sequence(1, k) with k <= 0 yields a
-    # DESCENDING array (Spark's default step is -1 when stop < start), and
-    # slice(toks, 0, n) then throws INVALID_PARAMETER_VALUE.START — any doc
-    # shorter than n tokens crashed the query. Emit an empty gram array for
-    # short docs instead (the DuckDB oracle's generate_series(1, k<=0) is
-    # already empty, so this also restores engine agreement by construction).
-    n_windows = F.size(toks) - (n - 1)
+    # One projected token column, then one md5 per window: linear in document
+    # length. A doc shorter than n tokens has no window and explodes to no
+    # row, as the DuckDB oracle's generate_series(1, k <= 0) is empty. The
+    # stream feeds both the duplicate-hash aggregate and the hits join, and
+    # each branch recomputes it: nothing is cached, so nothing is left over.
+    toks = F.filter(
+        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: F.length(t) > 0
+    )
     grams = (
-        df.select(
+        df.select(F.col(id_col), toks.alias("toks"))
+        .select(
             F.col(id_col),
-            F.explode(
-                F.when(
-                    n_windows >= 1,
-                    F.transform(
-                        F.sequence(F.lit(1), n_windows),
-                        lambda i: F.struct(
-                            i.alias("start_idx"),
-                            ngram_hash(F.array_join(F.slice(toks, i, n), " ")).alias(
-                                "h"
-                            ),
-                        ),
-                    ),
-                ).otherwise(F.array().cast("array<struct<start_idx:int,h:long>>"))
-            ).alias("g"),
-        ).select(id_col, "g.start_idx", "g.h")
-        # The explode + per-position md5 is the expensive projection and it
-        # feeds BOTH the duplicate-hash aggregate and the hits join below.
-        # A shared explicit exchange does NOT dedupe here (per-branch column
-        # pruning specializes the two exchange children, so ReuseExchange
-        # never fires — measured 4.7 s vs 0.77 s), so persist stays the
-        # right shape; the rotating registry bounds it to one cached frame
-        # (round-5 verdict #2/#3: the old bare persist leaked one per
-        # distinct invocation until LRU eviction).
-        .transform(lambda d: _rotating_persist(d, "dup_ngram_spans.grams"))
+            F.posexplode(F.transform(_word_ngrams(F.col("toks"), n), ngram_hash)),
+        )
+        .select(id_col, (F.col("pos") + 1).alias("start_idx"), F.col("col").alias("h"))
     )
 
     dup_hashes = (

@@ -6,7 +6,8 @@ assert the structural properties the 100 TB design depends on:
 - lexicon / dim joins are BroadcastHashJoin (never SMJ);
 - the overlap kernel (detect+categorize+resolve) reuses ONE doc-keyed exchange;
 - the disambiguation top-1 is a hash aggregate (partial + final), no sort;
-- whole-stage codegen covers the relational stages.
+- whole-stage codegen covers the relational stages;
+- the n-gram operators tokenize each text once per read of it.
 
 Writes BENCH/PLANS.md. Exits non-zero if an expectation is violated.
 """
@@ -28,6 +29,27 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+# a split or lower of the text column; ``split(lower(text))`` counts once
+TOKENIZE = re.compile(r"\b(?:split|lower)\((?:lower\()?text#\d+")
+# a leaf that reads the text: a scan, or an exchange reused from another branch
+TEXT_READ = re.compile(r"^.*(?:Scan|ReusedExchange)[^\n]*\btext#\d+", re.M)
+
+
+def executed_plan(df) -> str:
+    """Runs ``df`` and returns the plan that ran (an adaptive plan prints
+    its initial plan after it, which is cut off)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def tokenizations_and_reads(p: str) -> tuple[int, int]:
+    """(split/lower of the text, leaves reading the text) in a plan: a
+    tokenization inside a per-position lambda, or copied into a pushed-down
+    filter, makes the first exceed the second."""
+    return len(TOKENIZE.findall(p)), len(TEXT_READ.findall(p))
 
 
 def n_hash_ex(p: str) -> int:
@@ -247,6 +269,24 @@ def main() -> int:
                    and "BroadcastNestedLoopJoin" not in p, p))
     checks.append(("dup-hash detection is partial+final HashAggregate",
                    p.count("HashAggregate") >= 2, p))
+
+    # 16. n-gram operators: the text is tokenized once per read of it, in
+    # a projection of its own that the n-gram builder reads
+    from kgspark import dedup as _dedup
+
+    _docs_sf = entrymod._docs(spark, SF)
+    for name, df in (
+        ("dup_ngram_spans", entrymod.q_dup_ngram_spans(spark, SF)),
+        ("minhash_docs word", _dedup.minhash_docs(_docs_sf)),
+        ("minhash_docs char", _dedup.minhash_docs(_docs_sf, char_mode=True)),
+        ("contamination", entrymod.q_contamination(spark, SF)),
+    ):
+        p = executed_plan(df)
+        sections.append((f"{name} (executed plan)", p))
+        n_tok, n_read = tokenizations_and_reads(p)
+        checks.append(
+            (f"{name} tokenizes the text once per read ({n_tok} for {n_read})",
+             n_read >= 1 and n_tok == n_read, p))
 
     ok = True
     lines = ["# Physical-plan audit (generated by scripts/explain_audit.py)\n"]

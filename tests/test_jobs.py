@@ -3,8 +3,6 @@
 
 import json
 import os
-import subprocess
-import sys
 
 import pytest
 
@@ -82,7 +80,6 @@ def test_curate_job_no_mixture_no_pack(spark, curate_input, tmp_path):
 
 def test_curate_job_span_dedup_and_source_cap(spark, tmp_path):
     from jobs.curate import main
-    from kgspark.dedup import release_persisted
 
     def distinct_doc(i):
         return " ".join(f"w{i}x{j}" for j in range(60))
@@ -99,7 +96,6 @@ def test_curate_job_span_dedup_and_source_cap(spark, tmp_path):
     ).write.parquet(inp)
 
     out_dir = str(tmp_path / "curated3")
-    release_persisted()  # earlier callers' cached operator inputs
     persisted = persistent_rdd_ids(spark)
     rc = main([
         "--input", inp, "--output", out_dir,
@@ -122,44 +118,12 @@ def test_curate_job_span_dedup_and_source_cap(spark, tmp_path):
     assert out.filter("doc_id >= 300").count() == 0
 
 
-def test_release_persisted_skips_a_stopped_context():
-    """A registry frame left by a stopped SparkContext (a later pass in the
-    same JVM) has nothing to release: release_persisted frees the current
-    context's frames and does not fail on the stale one. Runs in its own
-    process, since it stops a context."""
-    script = """
-from pyspark.sql import SparkSession
-from kgspark import dedup
-
-def session():
-    return (SparkSession.builder.master("local[1]")
-            .config("spark.ui.enabled", "false").getOrCreate())
-
-old = session()
-dedup._rotating_persist(old.range(10), "stale").count()
-old.stop()
-cur = session()
-dedup._rotating_persist(cur.range(5), "live").count()
-assert cur.sparkContext._jsc.getPersistentRDDs().size() == 1
-dedup.release_persisted()
-assert cur.sparkContext._jsc.getPersistentRDDs().size() == 0
-assert not dedup._PERSIST_REGISTRY
-cur.stop()
-"""
-    proc = subprocess.run(
-        [sys.executable, "-c", script], capture_output=True, text=True, timeout=300,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-
-
 def test_dedup_job_counts(spark, tmp_path, capsys):
     """The dedup summary's counts, taken on the writes, equal the written
     output, and the manifest records the printed summary. A corpus with
     no near-duplicates writes empty pairs/groups and still returns. The
     job leaves no cached frame or checkpoint behind."""
     from jobs.dedup import main
-    from kgspark.dedup import release_persisted
 
     singletons = [
         (30 + i, f"singleton {i} " + " ".join(f"s{i}w{j}" for j in range(10)))
@@ -176,7 +140,6 @@ def test_dedup_job_counts(spark, tmp_path, capsys):
         spark.createDataFrame(rows, "doc_id long, text string").write.parquet(inp)
         out_dir = str(tmp_path / f"dedup-{name}")
         capsys.readouterr()
-        release_persisted()  # earlier callers' cached operator inputs
         persisted = persistent_rdd_ids(spark)
         assert main(["--input", inp, "--output", out_dir, "--groups"]) == 0
         assert persistent_rdd_ids(spark) <= persisted, name

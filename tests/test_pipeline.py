@@ -2,15 +2,31 @@
 
 import json
 import os
+from contextlib import contextmanager
 
 from kgspark import synth
+from kgspark.dedup import release_checkpoint
 from kgspark.pipeline import PipelineConfig, run_pipeline
 
 from tests.conftest import persistent_rdd_ids
 
 
+@contextmanager
+def _pipeline(spark, docs, lex, rd, sa, cfg):
+    """``run_pipeline`` whose redirect closure is freed on exit: a lazy run
+    leaves it to the caller (a checkpointed run has freed it already).
+    The run leaves no persisted RDD behind."""
+    persisted = persistent_rdd_ids(spark)
+    out = run_pipeline(spark, docs, lex, rd, sa, cfg)
+    try:
+        yield out
+    finally:
+        release_checkpoint(out["redirects_closed"])
+    assert persistent_rdd_ids(spark) <= persisted
+
+
 def _run(spark, docs, cfg=None):
-    return run_pipeline(
+    return _pipeline(
         spark,
         docs,
         synth.golden_lexicon_df(spark),
@@ -21,11 +37,11 @@ def _run(spark, docs, cfg=None):
 
 
 def test_golden_annotations_end_to_end(spark):
-    out = _run(spark, synth.golden_documents(spark))
-    got = {
-        (r["doc_id"].removeprefix("golden://"), r["start"], r["text"], r["dbpedia_uri"], r["category"])
-        for r in out["canonical"].collect()
-    }
+    with _run(spark, synth.golden_documents(spark)) as out:
+        got = {
+            (r["doc_id"].removeprefix("golden://"), r["start"], r["text"], r["dbpedia_uri"], r["category"])
+            for r in out["canonical"].collect()
+        }
     assert got == {
         ("g1", 1, "Vice President Gore", "dbr:Al_Gore", "PERSON"),
         ("g1", 24, "Washington D.C.", "dbr:Washington,_D.C.", "LOCATION"),
@@ -40,14 +56,14 @@ def test_golden_annotations_end_to_end(spark):
 
 def test_extraction_byte_identity_through_pipeline(spark):
     docs = synth.synth_documents(spark, n_docs=30)
-    out = _run(spark, docs)
-    mismatches = (
-        out["documents"]
-        .select("url", "text")
-        .join(docs.select("url", docs["text"].alias("expected")), "url")
-        .filter("text <> expected OR text IS NULL")
-        .count()
-    )
+    with _run(spark, docs) as out:
+        mismatches = (
+            out["documents"]
+            .select("url", "text")
+            .join(docs.select("url", docs["text"].alias("expected")), "url")
+            .filter("text <> expected OR text IS NULL")
+            .count()
+        )
     assert mismatches == 0
 
 
@@ -57,23 +73,25 @@ def test_segmentation_invariance_through_pipeline(spark):
     docs = synth.synth_documents(spark, n_docs=24)
     lex = synth.lexicon_df(spark)
     rd, sa = synth.redirects_df(spark), synth.sameas_df(spark)
-    big = run_pipeline(spark, docs, lex, rd, sa, PipelineConfig(max_len=100000))
-    small = run_pipeline(spark, docs, lex, rd, sa, PipelineConfig(max_len=800, overlap=300))
     key = lambda df: {
         (r["doc_id"], r["start"], r["text"], r["dbpedia_uri"])
         for r in df.select("doc_id", "start", "text", "dbpedia_uri").collect()
     }
-    assert key(big["mentions"]) == key(small["mentions"])
+    with _pipeline(spark, docs, lex, rd, sa, PipelineConfig(max_len=100000)) as big:
+        want = key(big["mentions"])
+    cfg = PipelineConfig(max_len=800, overlap=300)
+    with _pipeline(spark, docs, lex, rd, sa, cfg) as small:
+        assert key(small["mentions"]) == want
 
 
 def test_checkpoint_resume(spark, tmp_path):
     docs = synth.golden_documents(spark)
     cfg = PipelineConfig(checkpoint_root=str(tmp_path))
-    first = _run(spark, docs, cfg)
-    n1 = first["triples"].count()
-    again = _run(spark, docs, cfg)
-    assert again["triples"].count() == n1
-    assert all(m["resumed"] for m in again["metrics"])
+    with _run(spark, docs, cfg) as first:
+        n1 = first["triples"].count()
+    with _run(spark, docs, cfg) as again:
+        assert again["triples"].count() == n1
+        assert all(m["resumed"] for m in again["metrics"])
 
     from pyspark.sql import functions as F
 
@@ -109,7 +127,8 @@ def test_half_written_stage_recomputes_not_resumes(spark, tmp_path):
     docs = synth.golden_documents(spark)
     cfg = PipelineConfig(checkpoint_root=str(tmp_path))
     triples = lambda out: sorted(map(tuple, out["triples"].collect()))
-    expected = triples(_run(spark, docs, cfg))
+    with _run(spark, docs, cfg) as out:
+        expected = triples(out)
     manifest_path = os.path.join(str(tmp_path), "link", "_kg_manifest.json")
     stale = json.load(open(manifest_path))
 
@@ -125,8 +144,8 @@ def test_half_written_stage_recomputes_not_resumes(spark, tmp_path):
         else:
             with open(manifest_path, "w") as f:
                 json.dump({**stale, "complete": False}, f)
-        out = _run(spark, docs, cfg)
-        assert triples(out) == expected, how
+        with _run(spark, docs, cfg) as out:
+            assert triples(out) == expected, how
         resumed = {m["stage"]: m["resumed"] for m in out["metrics"]}
         assert resumed.pop("link") is False, how
         assert resumed and all(resumed.values()), (how, resumed)
@@ -142,7 +161,8 @@ def test_stale_version_stage_recomputes_not_resumes(spark, tmp_path):
     docs = synth.golden_documents(spark)
     cfg = PipelineConfig(checkpoint_root=str(tmp_path))
     triples = lambda out: sorted(map(tuple, out["triples"].collect()))
-    expected = triples(_run(spark, docs, cfg))
+    with _run(spark, docs, cfg) as out:
+        expected = triples(out)
     stage_dir = os.path.join(str(tmp_path), "overlaps")
     manifest_path = os.path.join(stage_dir, "_kg_manifest.json")
     stale = json.load(open(manifest_path))
@@ -153,8 +173,8 @@ def test_stale_version_stage_recomputes_not_resumes(spark, tmp_path):
         os.remove(crc_path)
     with open(manifest_path, "w") as f:
         json.dump({**stale, "version": "v0"}, f)
-    out = _run(spark, docs, cfg)
-    assert triples(out) == expected
+    with _run(spark, docs, cfg) as out:
+        assert triples(out) == expected
     resumed = {m["stage"]: m["resumed"] for m in out["metrics"]}
     assert resumed.pop("overlaps") is False
     assert resumed and all(resumed.values()), resumed
@@ -168,14 +188,15 @@ def test_lexicon_artifact_reused_not_rewritten(spark, tmp_path):
     docs = synth.golden_documents(spark)
     art = str(tmp_path / "lex_artifact")
     cfg = PipelineConfig(lexicon_artifact=art)
-    _run(spark, docs, cfg)["triples"].count()
+    with _run(spark, docs, cfg) as out:
+        out["triples"].count()
     success = os.path.join(art, "_SUCCESS")
     assert os.path.exists(success)
     mtimes = {
         f: os.path.getmtime(os.path.join(art, f)) for f in os.listdir(art)
     }
-    out2 = _run(spark, docs, cfg)
-    assert out2["triples"].count() > 0
+    with _run(spark, docs, cfg) as out2:
+        assert out2["triples"].count() > 0
     assert {
         f: os.path.getmtime(os.path.join(art, f)) for f in os.listdir(art)
     } == mtimes
@@ -189,7 +210,6 @@ def test_release_pipeline_caches_empties_cache_manager(spark):
     released on their own."""
     from kgspark.pipeline import release_pipeline_caches
     from kgspark.canonicalize import close_redirects
-    from kgspark.dedup import release_checkpoint
 
     spark.catalog.clearCache()
     persisted = persistent_rdd_ids(spark)
@@ -217,8 +237,8 @@ def test_triples_deterministic_across_runs(spark):
     rd, sa = synth.redirects_df(spark), synth.sameas_df(spark)
 
     def run():
-        out = run_pipeline(spark, docs, lex, rd, sa, PipelineConfig())
-        return {tuple(r) for r in out["triples"].collect()}
+        with _pipeline(spark, docs, lex, rd, sa, PipelineConfig()) as out:
+            return {tuple(r) for r in out["triples"].collect()}
 
     t1, t2 = run(), run()
     assert t1 == t2 and len(t1) > 0
@@ -233,17 +253,16 @@ def test_write_triples_parquet_layout(spark, tmp_path):
     from kgspark.triples import write_triples
 
     docs = synth.synth_documents(spark, n_docs=20)
-    out = run_pipeline(spark, docs, synth.lexicon_df(spark),
-                       synth.redirects_df(spark), synth.sameas_df(spark),
-                       PipelineConfig())
-    path = str(tmp_path / "triples")
-    write_triples(out["triples"], path)
-    parts = {d for d in os.listdir(path) if d.startswith("pred=")}
-    assert {"pred=kg%3AmentionedIn", "pred=kg%3AanchorOf"} <= parts
-    for d in parts:
-        files = [f for f in os.listdir(os.path.join(path, d)) if f.startswith("part-")]
-        assert len(files) == 1, (d, files)
-    back = spark.read.parquet(path)
-    assert set(back.columns) == {"subj", "pred", "obj"}
-    rows = lambda df: Counter(map(tuple, df.select("subj", "pred", "obj").collect()))
-    assert rows(back) == rows(out["triples"])
+    with _pipeline(spark, docs, synth.lexicon_df(spark), synth.redirects_df(spark),
+                   synth.sameas_df(spark), PipelineConfig()) as out:
+        path = str(tmp_path / "triples")
+        write_triples(out["triples"], path)
+        parts = {d for d in os.listdir(path) if d.startswith("pred=")}
+        assert {"pred=kg%3AmentionedIn", "pred=kg%3AanchorOf"} <= parts
+        for d in parts:
+            files = [f for f in os.listdir(os.path.join(path, d)) if f.startswith("part-")]
+            assert len(files) == 1, (d, files)
+        back = spark.read.parquet(path)
+        assert set(back.columns) == {"subj", "pred", "obj"}
+        rows = lambda df: Counter(map(tuple, df.select("subj", "pred", "obj").collect()))
+        assert rows(back) == rows(out["triples"])

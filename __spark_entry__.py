@@ -6,7 +6,9 @@ triples) at sf0.001. ``queries()`` exposes one callable per implemented
 operator from SURVEY.md §2 (plus the training-data-pipeline operators);
 ``oracle_sql()`` gives the DuckDB-equivalent SQL (kgspark.oracles) that
 recomputes the identical result on the same parquet views — the
-correctness gate. Column names/types are aligned pairwise.
+correctness gate. Column names/types are aligned pairwise. The KG queries
+are projections of one lazy ``run_pipeline`` (``_kg``), so the gate checks
+the pipeline that ``jobs/kg_construct.py`` runs.
 """
 
 from __future__ import annotations
@@ -18,20 +20,14 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from kgspark import oracles
 from kgspark import synth
 from kgspark.align import align_mentions, align_regions, sentence_regions, token_table
-from kgspark.automaton import FlatMatcher
-from kgspark.canonicalize import canonicalize, close_redirects, wikidata_properties
+from kgspark.canonicalize import close_redirects, wikidata_properties
 from kgspark.dedup import (
     exact_duplicates,
     minhash_near_duplicates,
     release_checkpoint,
     simhash_near_duplicates,
 )
-from kgspark.disambig import (
-    disambiguate,
-    doc_tokens,
-    generate_candidates,
-    link_mentions,
-)
+from kgspark.disambig import attach_types, generate_candidates
 from kgspark.entity_types import entity_types_map
 from kgspark.extract import extract_text
 from kgspark.multimodal import (
@@ -40,14 +36,10 @@ from kgspark.multimodal import (
     media_table,
     sample_video_frames,
 )
-from kgspark.overlaps import (
-    OVL_FLAGS,
-    categorize_overlap,
-    detect_overlap,
-    overlap_pipeline,
-    resolve_overlap,
-)
-from kgspark.segment import segment_documents, stitch_filter
+from kgspark.lineage import _hadoop_fs
+from kgspark.overlaps import OVL_FLAGS, categorize_overlap, detect_overlap
+from kgspark.pipeline import PipelineConfig, run_pipeline
+from kgspark.segment import segment_documents
 from kgspark.similarity import (
     cosine_topk,
     embedding_near_duplicates,
@@ -64,21 +56,27 @@ from kgspark.sources import (
     highlight_view,
     lookup,
 )
-from kgspark.spot import spot_documents, spot_segments
 from kgspark.streaming import sessionize
 from kgspark import textops
-from kgspark.triples import mentions_to_triples
 
-_AUTOMATON = None
+_LEX_ARTIFACT = None
 _RD_CLOSED = None
 
 
-def _automaton(spark: SparkSession):
-    global _AUTOMATON
-    if _AUTOMATON is None:
-        forms = sorted({r[0] for r in synth.LEXICON_ROWS})
-        _AUTOMATON = spark.sparkContext.broadcast(FlatMatcher(forms))
-    return _AUTOMATON
+def _lexicon_artifact() -> str:
+    """Where the synth lexicon's surface-form artifact lives, one per
+    session: ``run_pipeline`` writes it on the first KG query and reuses
+    it (its ``_SUCCESS``) on every later one, as production reuses the
+    artifact written once per lexicon refresh."""
+    global _LEX_ARTIFACT
+    if _LEX_ARTIFACT is None:
+        import atexit
+        import shutil
+        import tempfile
+
+        _LEX_ARTIFACT = tempfile.mkdtemp(prefix="kgspark-entry-lexicon-")
+        atexit.register(shutil.rmtree, _LEX_ARTIFACT, True)
+    return _LEX_ARTIFACT
 
 
 def _redirects_closed(spark: SparkSession):
@@ -89,7 +87,7 @@ def _redirects_closed(spark: SparkSession):
     invocation only re-derives the same constant dim. The memo is the
     closed table as one ``localCheckpoint``, so a query scans it instead of
     re-running the sink joins; the closure's own checkpoints are freed.
-    Same session-level memo pattern as ``_automaton``."""
+    Same session-level memo pattern as ``_lexicon_artifact``."""
     global _RD_CLOSED
     if _RD_CLOSED is None:
         closed = close_redirects(synth.redirects_df(spark))
@@ -109,25 +107,16 @@ def _redirects_closed(spark: SparkSession):
 _SMALL_INPUT_BYTES = 256 << 20
 
 
-def _input_bytes(path: str) -> int:
-    import glob
-    import os
-
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(f)
-            for f in glob.glob(os.path.join(path, "**"), recursive=True)
-            if os.path.isfile(f)
-        )
-    try:
-        return os.path.getsize(path)
-    except OSError:
-        return _SMALL_INPUT_BYTES  # unknown (non-local FS): leave untouched
+def _input_bytes(spark: SparkSession, path: str) -> int:
+    """Bytes under ``path``, sized through the Hadoop FileSystem API so a
+    ``file://``, HDFS or S3A URI is measured like a local path."""
+    fs, hpath = _hadoop_fs(spark, path)
+    return fs.getContentSummary(hpath).getLength()
 
 
 def _read_spread(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
-    if _input_bytes(path) < _SMALL_INPUT_BYTES:
+    if _input_bytes(spark, path) < _SMALL_INPUT_BYTES:
         df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
 
@@ -154,50 +143,35 @@ def _load(spark: SparkSession, sf_dir: str, name: str,
     return spark.read.parquet(path)
 
 
-def _spots(spark, sf_dir):
-    return spot_documents(_docs(spark, sf_dir), _automaton(spark), doc_col="doc_id")
-
-
-def _linked(spark, sf_dir):
-    return link_mentions(
-        _spots(spark, sf_dir),
-        synth.lexicon_df(spark),
-        _docs(spark, sf_dir),
-        doc_col="doc_id",
-        min_support=oracles.MIN_SUPPORT,
-        confidence=oracles.CONFIDENCE,
-    )
-
-
-def _linked_slim(spark, sf_dir):
-    """Narrow linked rows (no type payload) for the overlap/canonicalize
-    chain — types re-attach post-resolution where needed (attach_types)."""
-    return link_mentions(
-        _spots(spark, sf_dir),
-        synth.lexicon_df(spark),
-        _docs(spark, sf_dir),
-        doc_col="doc_id",
-        min_support=oracles.MIN_SUPPORT,
-        confidence=oracles.CONFIDENCE,
-        attach_type_cols=False,
-    )
-
-
-def _resolved(spark, sf_dir):
-    return overlap_pipeline(
-        _linked_slim(spark, sf_dir),
+def _kg(spark: SparkSession, sf_dir: str, **overrides) -> dict[str, DataFrame]:
+    """The frames of one lazy ``run_pipeline`` over the sf documents; every
+    KG query is a projection of them (``spots``, ``mentions``,
+    ``resolved``, ``canonical``, ``triples``). ``overrides`` set
+    ``PipelineConfig`` fields."""
+    cfg = PipelineConfig(
+        use_html=False,
         keep=["longest", "shortest"],
-        tiebreak="first",
-        doc_col="doc_id",
+        mapping=oracles.TYPE_MAPPING,
+        min_support=oracles.MIN_SUPPORT,
+        confidence=oracles.CONFIDENCE,
+        redirects_preclosed=True,
+        lexicon_artifact=_lexicon_artifact(),
+        **overrides,
+    )
+    return run_pipeline(
+        spark, _docs(spark, sf_dir), synth.lexicon_df(spark),
+        _redirects_closed(spark), synth.sameas_df(spark), cfg, doc_col="doc_id",
     )
 
 
-def _canonical(spark, sf_dir):
-    return canonicalize(
-        _resolved(spark, sf_dir),
-        _redirects_closed(spark),
-        synth.sameas_df(spark),
-    )
+def _spots(spark, sf_dir, **overrides):
+    return _kg(spark, sf_dir, **overrides)["spots"].select("doc_id", "start", "text")
+
+
+def _typed_mentions(spark, sf_dir):
+    """Linked mentions, before overlap resolution, with the types of the
+    lexicon row each one won by."""
+    return attach_types(_kg(spark, sf_dir)["mentions"], synth.lexicon_df(spark))
 
 
 # ---------------------------------------------------------------------------
@@ -240,12 +214,11 @@ def q_spot_mentions(spark, sf_dir):
     return _spots(spark, sf_dir)
 
 
-def q_segment_stitch(spark, sf_dir, max_len=300, overlap=80):
-    """C1+C2: spotting through the segmented path must equal direct spotting
-    — the oracle is the *unsegmented* SQL spotter."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    segs = segment_documents(docs, max_len=max_len, overlap=overlap)
-    return stitch_filter(spot_segments(segs, _automaton(spark), doc_col="doc_id"))
+def q_segment_stitch(spark, sf_dir):
+    """C1+C2: spotting through the pipeline's segmentation (300-char
+    segments, 80 overlap) must equal direct spotting — the oracle is the
+    *unsegmented* SQL spotter."""
+    return _spots(spark, sf_dir, max_len=300, overlap=80)
 
 
 def q_candidates(spark, sf_dir):
@@ -255,25 +228,19 @@ def q_candidates(spark, sf_dir):
 
 
 def q_disambiguate(spark, sf_dir):
-    # narrow contract: the projection needs no type payload, so skip the
-    # post-top-1 types join entirely (same rows, provably)
-    return _linked_slim(spark, sf_dir).select(
+    return _kg(spark, sf_dir)["mentions"].select(
         "doc_id", "start", "text", "dbpedia_uri"
     )
 
 
 def q_type_filter(spark, sf_dir):
-    cands = generate_candidates(_spots(spark, sf_dir), synth.lexicon_df(spark))
-    toks = doc_tokens(_docs(spark, sf_dir), doc_col="doc_id")
-    out = disambiguate(
-        cands, toks, confidence=oracles.CONFIDENCE, types=["Software"],
-        lexicon=synth.lexicon_df(spark),
+    return _kg(spark, sf_dir, types=["Software"])["mentions"].select(
+        "doc_id", "start", "text", "dbpedia_uri"
     )
-    return out.select("doc_id", "start", "text", "dbpedia_uri")
 
 
 def q_types_pivot(spark, sf_dir):
-    return _linked(spark, sf_dir).select(
+    return _typed_mentions(spark, sf_dir).select(
         "doc_id",
         "start",
         "text",
@@ -283,13 +250,13 @@ def q_types_pivot(spark, sf_dir):
 
 
 def q_detect_overlap(spark, sf_dir):
-    return detect_overlap(_linked(spark, sf_dir), doc_col="doc_id").select(
+    return detect_overlap(_kg(spark, sf_dir)["mentions"], doc_col="doc_id").select(
         "doc_id", "start", "text", "end", "ovl_id"
     )
 
 
 def q_categorize_overlap(spark, sf_dir):
-    detected = detect_overlap(_linked(spark, sf_dir), doc_col="doc_id")
+    detected = detect_overlap(_kg(spark, sf_dir)["mentions"], doc_col="doc_id")
     return categorize_overlap(detected, doc_col="doc_id").select(
         "doc_id", "start", "text", "ovl_id", *OVL_FLAGS
     )
@@ -303,7 +270,7 @@ def q_overlap_synthesis(spark, sf_dir):
     (intersect span, trimmed prefix of the second text). The oracle
     re-derives spans, pipe-joined uri lists (first-occurrence order) and
     the 2-member text arithmetic."""
-    detected = detect_overlap(_linked(spark, sf_dir), doc_col="doc_id")
+    detected = detect_overlap(_kg(spark, sf_dir)["mentions"], doc_col="doc_id")
     cat = categorize_overlap(
         detected, doc_col="doc_id", experimental=True, keep_type_col=True
     )
@@ -320,7 +287,9 @@ def q_overlap_synthesis(spark, sf_dir):
 
 
 def q_resolve_overlap(spark, sf_dir):
-    return _resolved(spark, sf_dir).select("doc_id", "start", "text", "dbpedia_uri", "ovl_id")
+    return _kg(spark, sf_dir)["resolved"].select(
+        "doc_id", "start", "text", "dbpedia_uri", "ovl_id"
+    )
 
 
 def q_resolve_overlap_hash(spark, sf_dir):
@@ -328,35 +297,31 @@ def q_resolve_overlap_hash(spark, sf_dir):
     reference's sample() (R/overlaps.R:606-608). The tie key is md5-derived
     so the oracle recomputes the identical winner — previously this path
     was unit-tested only."""
-    resolved = overlap_pipeline(
-        _linked_slim(spark, sf_dir), keep=["longest", "shortest"],
-        tiebreak="hash", doc_col="doc_id",
+    return _kg(spark, sf_dir, tiebreak="hash")["resolved"].select(
+        "doc_id", "start", "text", "dbpedia_uri", "ovl_id"
     )
-    return resolved.select("doc_id", "start", "text", "dbpedia_uri", "ovl_id")
 
 
 def q_entity_types(spark, sf_dir):
-    typed = entity_types_map(_linked(spark, sf_dir), oracles.TYPE_MAPPING)
+    typed = entity_types_map(_typed_mentions(spark, sf_dir), oracles.TYPE_MAPPING)
     return typed.select("doc_id", "start", "text", "category")
 
 
 def q_canonicalize(spark, sf_dir):
-    return _canonical(spark, sf_dir).select(
+    return _kg(spark, sf_dir)["canonical"].select(
         "doc_id", "start", "text", "canonical_uri", "wikidata_id"
     )
 
 
 def q_wikidata_props(spark, sf_dir):
-    enriched = wikidata_properties(_canonical(spark, sf_dir), synth.labels_df(spark))
+    enriched = wikidata_properties(
+        _kg(spark, sf_dir)["canonical"], synth.labels_df(spark)
+    )
     return enriched.select("doc_id", "start", "canonical_uri", "prop_labels")
 
 
 def q_triples(spark, sf_dir):
-    from kgspark.disambig import attach_types
-
-    with_types = attach_types(_canonical(spark, sf_dir), synth.lexicon_df(spark))
-    typed = entity_types_map(with_types, oracles.TYPE_MAPPING)
-    return mentions_to_triples(typed, doc_col="doc_id")
+    return _kg(spark, sf_dir)["triples"]
 
 
 def q_align_tokens(spark, sf_dir):
@@ -847,7 +812,7 @@ def q_token_decode(spark, sf_dir):
 def q_highlight(spark, sf_dir):
     """K3: the full as_subcorpus payload — color + href + tooltip + the
     cpos matrix from token alignment (R/utils.R:157-166)."""
-    linked = _linked(spark, sf_dir)
+    linked = _typed_mentions(spark, sf_dir)
     typed = highlight_view(entity_types_map(linked, oracles.TYPE_MAPPING))
     toks = token_table(_docs(spark, sf_dir), doc_col="doc_id", with_gap=True)
     aligned = align_mentions(linked.select("doc_id", "start", "text"), toks)
@@ -1018,6 +983,27 @@ def q_ann_ivf(spark, sf_dir):
     return ivf_topk(emb, query_ids=[0, 1, 2, 3, 4], centroids=cents, k=5, nprobe=4)
 
 
+def _int_sig(col: str):
+    """Pipe-joined integer signature of a numeric array column."""
+    return F.array_join(
+        F.transform(F.col(col), lambda x: x.cast("bigint").cast("string")), "|"
+    )
+
+
+def _resized_codec_features(spark, sf_dir, *cols, **codec):
+    """The real-codec resize path shared by the resize queries: encode the
+    id-derived images (``codec`` picks the format), decode, resize to a
+    4x3 grid, re-encode, decode again and sign the feature stats."""
+    from kgspark.multimodal import codec_media_table, resize_images
+
+    media = codec_media_table(_docs(spark, sf_dir), n=48, **codec)
+    resized = resize_images(media.filter(F.col("kind") == "image"), width=4, height=3)
+    feats = extract_features(resized, decode_mode="real")
+    return feats.select(
+        "media_id", "kind", *cols, _int_sig("feature").alias("feature_sig")
+    )
+
+
 def q_media_features(spark, sf_dir):
     """Multimodal feature extraction over a documents-derived media table;
     the md5-digest signature projection makes the oracle compare exact."""
@@ -1038,11 +1024,7 @@ def q_media_features_real(spark, sf_dir):
     media = codec_media_table(_docs(spark, sf_dir), n=48)
     feats = extract_features(media, decode_mode="real")
     return feats.select(
-        "media_id", "kind", "n_bytes",
-        F.array_join(
-            F.transform(F.col("feature"), lambda x: x.cast("bigint").cast("string")),
-            "|",
-        ).alias("feature_sig"),
+        "media_id", "kind", "n_bytes", _int_sig("feature").alias("feature_sig")
     )
 
 
@@ -1054,18 +1036,7 @@ def q_media_resize(spark, sf_dir):
     oracle re-derives every resized pixel from the id formulas plus the
     same integer index mapping — a green hash proves
     decode -> resize -> encode -> decode is exact end to end."""
-    from kgspark.multimodal import codec_media_table, resize_images
-
-    media = codec_media_table(_docs(spark, sf_dir), n=48)
-    resized = resize_images(media.filter(F.col("kind") == "image"), width=4, height=3)
-    feats = extract_features(resized, decode_mode="real")
-    return feats.select(
-        "media_id", "kind", "n_bytes",
-        F.array_join(
-            F.transform(F.col("feature"), lambda x: x.cast("bigint").cast("string")),
-            "|",
-        ).alias("feature_sig"),
-    )
+    return _resized_codec_features(spark, sf_dir, "n_bytes")
 
 
 def q_media_png_resize(spark, sf_dir):
@@ -1075,20 +1046,7 @@ def q_media_png_resize(spark, sf_dir):
     re-derives every resized pixel from the id formulas; a green hash
     proves the pure-python PNG codec (all five scanline filters, stdlib
     zlib) inverts itself on real container bytes."""
-    from kgspark.multimodal import codec_media_table, resize_images
-
-    media = codec_media_table(
-        _docs(spark, sf_dir), n=48, image_formats=("png", "png")
-    )
-    resized = resize_images(media.filter(F.col("kind") == "image"), width=4, height=3)
-    feats = extract_features(resized, decode_mode="real")
-    return feats.select(
-        "media_id", "kind",
-        F.array_join(
-            F.transform(F.col("feature"), lambda x: x.cast("bigint").cast("string")),
-            "|",
-        ).alias("feature_sig"),
-    )
+    return _resized_codec_features(spark, sf_dir, image_formats=("png", "png"))
 
 
 def q_media_jpeg_progressive(spark, sf_dir):
@@ -1098,20 +1056,9 @@ def q_media_jpeg_progressive(spark, sf_dir):
     resize -> baseline re-encode -> decode. Flat blocks at quality 100
     survive exactly, so the oracle pins the whole progressive scan
     machinery with the same closed-form arithmetic as the baseline twin."""
-    from kgspark.multimodal import codec_media_table, resize_images
-
-    media = codec_media_table(
-        _docs(spark, sf_dir), n=48,
+    return _resized_codec_features(
+        spark, sf_dir,
         image_formats=("jpeg_progressive", "jpeg_progressive"), flat=True,
-    )
-    resized = resize_images(media.filter(F.col("kind") == "image"), width=4, height=3)
-    feats = extract_features(resized, decode_mode="real")
-    return feats.select(
-        "media_id", "kind",
-        F.array_join(
-            F.transform(F.col("feature"), lambda x: x.cast("bigint").cast("string")),
-            "|",
-        ).alias("feature_sig"),
     )
 
 
@@ -1121,20 +1068,7 @@ def q_media_gif_resize(spark, sf_dir):
     -> GIF encode -> LZW decode -> integer nearest-neighbor resize ->
     GIF re-encode -> decode -> feature stats. Same closed-form oracle as
     the PNG twin with feature code 6."""
-    from kgspark.multimodal import codec_media_table, resize_images
-
-    media = codec_media_table(
-        _docs(spark, sf_dir), n=48, image_formats=("gif", "gif")
-    )
-    resized = resize_images(media.filter(F.col("kind") == "image"), width=4, height=3)
-    feats = extract_features(resized, decode_mode="real")
-    return feats.select(
-        "media_id", "kind",
-        F.array_join(
-            F.transform(F.col("feature"), lambda x: x.cast("bigint").cast("string")),
-            "|",
-        ).alias("feature_sig"),
-    )
+    return _resized_codec_features(spark, sf_dir, image_formats=("gif", "gif"))
 
 
 def q_media_jpeg_roundtrip(spark, sf_dir):
@@ -1146,20 +1080,7 @@ def q_media_jpeg_roundtrip(spark, sf_dir):
     oracle re-derives every value closed-form and a green hash pins the
     whole lossy-container codec; the high-frequency (tolerance) paths
     are pinned by tests/test_textops_dedup.py::test_jpeg_codec_*."""
-    from kgspark.multimodal import codec_media_table, resize_images
-
-    media = codec_media_table(
-        _docs(spark, sf_dir), n=48, image_formats=("jpeg", "jpeg"), flat=True
-    )
-    resized = resize_images(media.filter(F.col("kind") == "image"), width=4, height=3)
-    feats = extract_features(resized, decode_mode="real")
-    return feats.select(
-        "media_id", "kind",
-        F.array_join(
-            F.transform(F.col("feature"), lambda x: x.cast("bigint").cast("string")),
-            "|",
-        ).alias("feature_sig"),
-    )
+    return _resized_codec_features(spark, sf_dir, image_formats=("jpeg", "jpeg"), flat=True)
 
 
 def q_video_frames_real(spark, sf_dir):
@@ -1175,11 +1096,7 @@ def q_video_frames_real(spark, sf_dir):
     frames = sample_video_frames(media, every_ms=200, decode_mode="real")
     return frames.select(
         "media_id", "frame_ts_ms",
-        F.array_join(
-            F.transform(F.col("frame_feature"),
-                        lambda x: x.cast("bigint").cast("string")),
-            "|",
-        ).alias("frame_sig"),
+        _int_sig("frame_feature").alias("frame_sig"),
     )
 
 

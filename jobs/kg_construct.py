@@ -65,21 +65,27 @@ def main(argv: list[str] | None = None) -> int:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
 
-    if args.input_format == "warc":
+    def responses(records):
+        """WARC records -> (url, warc_ts, html) documents. http_responses
+        strips the HTTP envelope real crawls store in response payloads
+        (status line/headers/chunked/charset); bare-HTML payloads (our
+        own writer's default) pass through untouched."""
         from pyspark.sql import functions as F
 
-        from kgspark.warc import http_responses, read_warc
+        from kgspark.warc import http_responses
 
-        # http_responses strips the HTTP envelope real crawls store in
-        # response payloads (status line/headers/chunked/charset); bare-HTML
-        # payloads (our own writer's default) pass through untouched.
-        docs = http_responses(
-            read_warc(spark, args.input).filter(F.col("record_type") == "response")
+        return http_responses(
+            records.filter(F.col("record_type") == "response")
         ).select(
             "url",
             F.col("warc_ts").cast("timestamp").alias("warc_ts"),
             "html",
         )
+
+    if args.input_format == "warc":
+        from kgspark.warc import read_warc
+
+        docs = responses(read_warc(spark, args.input))
     else:
         docs = spark.read.parquet(args.input)
     # Schema-driven defaults so the bare invocation works on any documents
@@ -129,21 +135,11 @@ def main(argv: list[str] | None = None) -> int:
             ap.error("--streaming requires --input-format warc")
         import dataclasses
 
-        from pyspark.sql import functions as F
-
         from kgspark.dedup import release_checkpoint
         from kgspark.pipeline import release_pipeline_caches
-        from kgspark.warc import http_responses, read_warc_stream
+        from kgspark.warc import read_warc_stream
 
-        stream = http_responses(
-            read_warc_stream(spark, args.input).filter(
-                F.col("record_type") == "response"
-            )
-        ).select(
-            "url",
-            F.col("warc_ts").cast("timestamp").alias("warc_ts"),
-            "html",
-        )
+        stream = responses(read_warc_stream(spark, args.input))
         batches: list[dict] = []
 
         def process_batch(batch_df, batch_id: int) -> None:

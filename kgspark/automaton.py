@@ -5,8 +5,11 @@ service the reference delegates to over HTTP (``R/dbpedia.R:471-485``).
 Spotlight's spotter is a lexicon matcher (Mendes et al. 2011 §4.1); we build
 the same thing: a :class:`FlatMatcher` over the ``surface_form`` column of
 the lexicon (vectorized numpy per-length substring probes, compact byte
-tables that pickle/mmap cheaply, no per-character Python loop), applied to
-whole Arrow batches inside a pandas UDF (see ``kgspark.spot``).
+tables that mmap cheaply, no per-character Python loop), applied to whole
+Arrow batches inside a pandas UDF (see ``kgspark.spot``). Spotting reads
+the matcher only from a parquet artifact of the surface forms: each host
+compiles it once and every python worker mmaps the compiled tables
+(``load_automaton_from_artifact``).
 Matches are emitted for *every* word-bounded dictionary occurrence
 (including nested and overlapping ones); overlap resolution is a
 downstream, relational concern (``kgspark.overlaps``).
@@ -210,13 +213,19 @@ class FlatMatcher:
 
 
 # ---------------------------------------------------------------------------
-# Artifact path: build the matcher ON THE EXECUTORS from a parquet artifact
+# The artifact: build the matcher ON THE EXECUTORS from a parquet artifact
 # of surface forms, once per host, instead of collect()-ing the lexicon to
 # the Spark driver and shipping a pickled matcher through a broadcast. At a
 # real Spotlight lexicon (10^6-10^7 forms) the artifact is ~100 MB of
 # compressed parquet; the first worker compiles the flat tables (seconds
 # at 10^6 forms) and publishes them for its siblings to mmap.
-_PROCESS_CACHE: dict[str, object] = {}
+#
+# The per-process memo maps an artifact path to (its part-file names, the
+# matcher). Spark names every written part file with a fresh UUID, so a
+# rewrite of the same path (run_pipeline rewrites
+# <checkpoint_root>/_lexicon_forms on every run) changes the names and the
+# reused python workers rebuild instead of serving the old lexicon.
+_PROCESS_CACHE: dict[str, tuple[tuple[str, ...], FlatMatcher]] = {}
 
 
 def write_lexicon_artifact(lexicon, path: str) -> str:
@@ -227,15 +236,24 @@ def write_lexicon_artifact(lexicon, path: str) -> str:
     return path
 
 
-def _read_artifact_forms(path: str) -> list[str]:
-    import glob
+def _artifact_parts(path: str) -> tuple[str, ...]:
+    import os
+
+    return tuple(sorted(
+        f for f in os.listdir(path)
+        if f.startswith("part-") and f.endswith(".parquet")
+    ))
+
+
+def _read_artifact_forms(path: str, parts: tuple[str, ...]) -> list[str]:
     import os
 
     import pyarrow.parquet as pq
 
     forms: list[str] = []
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        forms.extend(pq.read_table(f, columns=["surface_form"]).column(0).to_pylist())
+    for f in parts:
+        forms.extend(pq.read_table(os.path.join(path, f), columns=["surface_form"])
+                     .column(0).to_pylist())
     return forms
 
 
@@ -250,10 +268,12 @@ def load_automaton_from_artifact(path: str):
     pattern bytes instead of a private heap per process. Falls back to a
     private in-process build whenever the shared directory is not
     writable or the lock is contended past a short wait (correctness
-    never depends on the cache). Per-process memo on top, as before."""
-    auto = _PROCESS_CACHE.get(path)
-    if auto is not None:
-        return auto
+    never depends on the cache). Per-process memo on top, keyed by the
+    artifact's part-file names so a rewritten artifact is rebuilt."""
+    parts = _artifact_parts(path)
+    cached = _PROCESS_CACHE.get(path)
+    if cached is not None and cached[0] == parts:
+        return cached[1]
 
     import os
     import tempfile
@@ -294,7 +314,7 @@ def load_automaton_from_artifact(path: str):
             if auto is None and got:
                 auto = _try_load()  # published while we waited on the lock
                 if auto is None:
-                    built = FlatMatcher(_read_artifact_forms(path))
+                    built = FlatMatcher(_read_artifact_forms(path, parts))
                     try:
                         tmp = tempfile.mkdtemp(prefix="_flat_tmp_", dir=path)
                         built.save_compiled(tmp)
@@ -311,6 +331,6 @@ def load_automaton_from_artifact(path: str):
                 except OSError:
                     pass
     if auto is None:
-        auto = FlatMatcher(_read_artifact_forms(path))
-    _PROCESS_CACHE[path] = auto
+        auto = FlatMatcher(_read_artifact_forms(path, parts))
+    _PROCESS_CACHE[path] = (parts, auto)
     return auto

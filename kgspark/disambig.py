@@ -19,9 +19,12 @@ whole-stage codegen):
 - top-1:        ``min_by`` over the struct ``(-score, uri)`` per
                 ``(doc_id, start, text)`` — max score, deterministic min-uri
                 tiebreak (SURVEY §4), as a hash aggregation;
-- types:        re-attached from the broadcast lexicon after top-1; optional
-                restriction ``arrays_overlap(dbpedia_types, wanted)`` (D6,
-                server-side `types` param in the reference).
+- types:        attached after top-1 from the winning lexicon row, a
+                broadcast join on the lexicon key (surface form, uri) with
+                no aggregation in front (``attach_types``); the optional
+                restriction (D6, server-side `types` param in the
+                reference) is a semi-join of the winners against the keys
+                whose DBpedia types overlap the wanted ones.
 
 Scale notes: the lexicon join is an explicit ``broadcast()``; the doc-token
 join is an equi-join on ``doc_id`` (AQE/skew-join handles head documents);
@@ -71,8 +74,8 @@ def generate_candidates(
 ) -> DataFrame:
     """D2 + D3: equi-join mentions × broadcast lexicon, prominence filter.
 
-    The type arrays stay behind: they are re-attached from the broadcast
-    lexicon AFTER top-1 selection (``disambiguate``), so candidate rows
+    The type arrays stay behind: they are attached from the broadcast
+    lexicon AFTER top-1 selection (``attach_types``), so candidate rows
     stay narrow through the scoring shuffle — at 10^12 docs the
     per-candidate type arrays would otherwise dominate the shuffle volume.
     """
@@ -90,31 +93,29 @@ def generate_candidates(
     )
 
 
-def types_dim(lexicon: DataFrame) -> DataFrame:
-    """Broadcast (uri -> type arrays) dim shared by the post-top-1 attach."""
-    return (
-        lexicon.select("uri", "dbpedia_types", "wikidata_types")
-        .dropDuplicates(["uri"])
-        .withColumnRenamed("uri", "_t_uri")
-    )
+def _on_lexicon_key(df: DataFrame, dim: DataFrame, how: str) -> DataFrame:
+    """Broadcast join of linked rows with a lexicon projection on the
+    lexicon key: (text, dbpedia_uri) = (surface_form, uri)."""
+    dim = dim.withColumnRenamed("surface_form", "_t_sf").withColumnRenamed("uri", "_t_uri")
+    on = (F.col("text") == F.col("_t_sf")) & (F.col("dbpedia_uri") == F.col("_t_uri"))
+    return df.join(F.broadcast(dim), on, how).drop("_t_sf", "_t_uri")
 
 
-def attach_types(
-    df: DataFrame, lexicon: DataFrame, uri_col: str = "dbpedia_uri"
-) -> DataFrame:
+def attach_types(df: DataFrame, lexicon: DataFrame) -> DataFrame:
     """Attach the nested types map + per-KB pivots to already-linked rows.
 
-    The projection ``disambiguate`` emits (it calls this), as a broadcast
-    left join on the (deduped) lexicon — split out so the overlap window
-    family can run on NARROW rows and the type payload joins on at the
-    end (the window sorts otherwise carry the map + two pivot strings
-    through every pass; measured 0.7 s on the sf0.1 chain).
+    A broadcast left join on the lexicon's own key, (surface form, uri) =
+    (``text``, ``dbpedia_uri``): the row a mention won by is the row whose
+    types it gets, and the dim is the lexicon projected, with no
+    aggregation or exchange in front of the broadcast. The key is the one
+    the candidate join already assumes unique (a duplicate would
+    double-count ``score_sum``). Split out so the overlap kernel runs on
+    NARROW rows and the type payload joins on once, after resolution.
     """
     dt, wt = F.col("dbpedia_types"), F.col("wikidata_types")
+    dim = lexicon.select("surface_form", "uri", "dbpedia_types", "wikidata_types")
     return (
-        df.join(F.broadcast(types_dim(lexicon)),
-                F.col(uri_col) == F.col("_t_uri"), "left")
-        .drop("_t_uri")
+        _on_lexicon_key(df, dim, "left")
         .withColumn(
             "types",
             F.create_map(F.lit("DBpedia"), dt, F.lit("Wikidata"), wt),
@@ -156,7 +157,9 @@ def disambiguate(
 
     Returns the annotation-table IR (R/dbpedia.R:447-453) with nested
     ``types`` map plus the per-KB pivots DBpedia_type / Wikidata_type
-    (P4/P5, R/dbpedia.R:560-600), the types re-attached from ``lexicon``.
+    (P4/P5, R/dbpedia.R:560-600), the types attached from the winning
+    (surface form, uri) lexicon row; ``attach_type_cols=False`` returns
+    the narrow (doc_id, start, text, dbpedia_uri) rows instead.
     """
     if "doc_tokens" in candidates.columns:
         joined = candidates
@@ -189,24 +192,22 @@ def disambiguate(
     winners = grouped.filter(
         (F.col("best.score") / F.col("score_sum")) >= F.lit(confidence)
     ).select("doc_id", "start", "text", F.col("best.uri").alias("dbpedia_uri"))
-    if not attach_type_cols and not types:
-        # narrow contract for the overlap chain: the caller re-attaches the
-        # type payload after resolution (attach_types) so the window family
-        # never sorts/shuffles it.
-        return winners
-    # re-attach types from the broadcast dim AFTER the winner is chosen:
-    # the scoring shuffle only ever carried (uri, score).
-    out = attach_types(winners, lexicon)
     if types:
         # D6: keep only entities carrying one of the wanted DBpedia types
-        # (R/dbpedia.R:479-482).
-        out = out.filter(
+        # (R/dbpedia.R:479-482), as a semi-join on the lexicon key — the
+        # winners stay narrow, the type arrays never ride along.
+        wanted = lexicon.filter(
             F.arrays_overlap(
-                F.coalesce(F.col("types")["DBpedia"], F.array()),
+                F.coalesce(F.col("dbpedia_types"), F.array().cast("array<string>")),
                 F.array(*[F.lit(t) for t in types]),
             )
-        )
-    return out
+        ).select("surface_form", "uri")
+        winners = _on_lexicon_key(winners, wanted, "left_semi")
+    # narrow rows for the overlap chain: the caller attaches the type
+    # payload after resolution (attach_types); otherwise attach it here,
+    # after the winner is chosen — the scoring shuffle only carried
+    # (uri, score).
+    return attach_types(winners, lexicon) if attach_type_cols else winners
 
 
 def _pivot_types(col):

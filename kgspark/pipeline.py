@@ -7,7 +7,7 @@ documents(url, warc_ts, html, text, lang)
   -> stitch (pure filter)
   -> link (candidates x broadcast lexicon; prior + context scoring; top-1)
   -> overlaps (detect/categorize/resolve — one per-document kernel)
-  -> entity types (T2 expression)
+  -> entity types (types attach on the lexicon key; T2 expression)
   -> canonicalize (broadcast redirect/sameAs dims)
   -> triples (distinct + partitioned write)
 
@@ -17,7 +17,9 @@ top-1 link aggregation and the overlap kernel
 distribution and the kernel's repartition(doc_id) —
 disambig.disambiguate(partition_by_doc=True)), one distinct for the
 triple set, plus the terminal write's ``REBALANCE`` on ``pred``, which AQE
-sizes from the data. Everything else is narrow.
+sizes from the data. Everything else is narrow: the entity-types stage
+broadcasts the lexicon as projected and joins it on its (surface form,
+uri) key, so it writes no shuffle.
 """
 
 from __future__ import annotations
@@ -102,10 +104,8 @@ def run_pipeline(
     # Probe _SUCCESS through the Hadoop FileSystem API (not os.path), so
     # reuse works when the artifact lives on HDFS/S3A.
     fs, success = _hadoop_fs(spark, artifact.rstrip("/") + "/_SUCCESS")
-    if cfg.lexicon_artifact and fs.exists(success):
-        automaton_src = artifact
-    else:
-        automaton_src = write_lexicon_artifact(lexicon, artifact)
+    if not (cfg.lexicon_artifact and fs.exists(success)):
+        write_lexicon_artifact(lexicon, artifact)
 
     # No cache on the extract stage: since the doc-token carry moved to
     # the segment stage (doc_tokens ride the segment rows), the extracted
@@ -138,7 +138,7 @@ def run_pipeline(
         lambda: segment.stitch_filter(
             spot.spot_segments(
                 segs,
-                automaton_src,
+                artifact,
                 doc_col=doc_col,
                 keep_extra=("keep_from", "keep_to", "doc_tokens"),
             )
@@ -163,11 +163,10 @@ def run_pipeline(
             # one doc-keyed exchange serves the top-1 agg AND the
             # overlap kernel (faster in both A/Bs, BENCH/AB_PARTITION.json)
             partition_by_doc=True,
-            # narrow rows through the overlap kernel; the type
-            # payload re-attaches once, post-resolution (attach_types) —
-            # with a D6 type restriction the types must ride along for
-            # the filter, so the narrow contract only applies without it.
-            attach_type_cols=bool(cfg.types),
+            # narrow rows through the overlap kernel (a D6 restriction is
+            # a semi-join, so they stay narrow with it too); the type
+            # payload attaches once, post-resolution (attach_types)
+            attach_type_cols=False,
         ),
     )
 
@@ -185,10 +184,7 @@ def run_pipeline(
     typed = runner.run(
         "entity_types",
         lambda: entity_types.entity_types_map(
-            resolved
-            if "DBpedia_type" in resolved.columns
-            else disambig.attach_types(resolved, lexicon),
-            cfg.mapping,
+            disambig.attach_types(resolved, lexicon), cfg.mapping
         ),
     )
 

@@ -5,8 +5,10 @@ half of the black box the reference calls over HTTP,
 ``R/dbpedia.R:471-485``; algorithm per Mendes et al. 2011 §4.1): the
 vectorized ``FlatMatcher`` over the lexicon's surface forms (numpy
 per-length substring probes), applied to each whole Arrow batch in a
-pandas UDF. Emits *all* word-bounded occurrences (nested and overlapping
-included) — overlap resolution is downstream and relational.
+pandas UDF. The matcher is read only from the surface-form parquet
+artifact, built on the executors; nothing is collected to the driver or
+shipped in a broadcast. Emits *all* word-bounded occurrences (nested and
+overlapping included) — overlap resolution is downstream and relational.
 
 Offsets: the reference emits 1-based character starts (Spotlight's 0-based
 ``@offset`` plus the segment offset, default 1 — ``R/dbpedia.R:365,557``).
@@ -25,22 +27,16 @@ from kgspark.automaton import load_automaton_from_artifact
 from kgspark.schemas import MENTIONS_ARRAY
 
 
-def make_spot_udf(source):
-    """Build the spotting pandas UDF.
-
-    ``source`` is either a ``Broadcast[FlatMatcher]`` (small lexicons; the
-    pickled matcher rides the broadcast) or a ``str`` path to a surface-
-    form parquet artifact — then the python workers load the matcher
-    compiled once per host and cache it per process (the 10⁶⁺-form scale
-    path; see kgspark.automaton.load_automaton_from_artifact). Either way
-    the whole Arrow batch is matched in one numpy pass.
-    """
-
-    by_path = isinstance(source, str)
+def make_spot_udf(artifact: str):
+    """Build the spotting pandas UDF over a surface-form parquet artifact
+    (``kgspark.automaton.write_lexicon_artifact``): the python workers
+    load the matcher compiled once per host and cache it per process (see
+    ``kgspark.automaton.load_automaton_from_artifact``), and the whole
+    Arrow batch is matched in one numpy pass."""
 
     @pandas_udf(MENTIONS_ARRAY)
     def _spot(texts: pd.Series) -> pd.Series:
-        matcher = load_automaton_from_artifact(source) if by_path else source.value
+        matcher = load_automaton_from_artifact(artifact)
         per_doc = matcher.find_word_bounded_batch(texts.tolist())
         return pd.Series(
             [[{"off0": s, "sf": p} for s, p in hits] for hits in per_doc]
@@ -51,7 +47,7 @@ def make_spot_udf(source):
 
 def spot_segments(
     segments: DataFrame,
-    automaton_src,
+    artifact: str,
     doc_col: str = "url",
     seg_text_col: str = "seg_text",
     seg_off_col: str = "seg_off",
@@ -62,7 +58,7 @@ def spot_segments(
     One narrow pipeline: UDF -> explode; no shuffle. ``start`` is 1-based in
     the original document (offset rebase, P2 — ``R/dbpedia.R:557``).
     """
-    spot = make_spot_udf(automaton_src)
+    spot = make_spot_udf(artifact)
     exploded = segments.withColumn("_m", F.explode(spot(F.col(seg_text_col))))
     cols = [
         F.col(doc_col).alias("doc_id"),
@@ -73,12 +69,12 @@ def spot_segments(
 
 
 def spot_documents(
-    docs: DataFrame, automaton_src, doc_col: str = "url", text_col: str = "text"
+    docs: DataFrame, artifact: str, doc_col: str = "url", text_col: str = "text"
 ) -> DataFrame:
     """Spot whole (un-segmented) documents; start is 1-based."""
     return spot_segments(
         docs.withColumn("_seg_off", F.lit(1)),
-        automaton_src,
+        artifact,
         doc_col=doc_col,
         seg_text_col=text_col,
         seg_off_col="_seg_off",

@@ -215,11 +215,8 @@ def build_http_response(
     )
 
 
-def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed WARC scan: one task per file (the crawl-archive split
-    unit), records parsed by an Arrow-batched kernel. Returns
-    (url, warc_ts, record_type, payload)."""
-    files = spark.read.format("binaryFile").load(path)
+def _parse_records(files: DataFrame) -> DataFrame:
+    """binaryFile rows -> WARC records, an Arrow-batched record walk."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -231,6 +228,13 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
             )
 
     return files.select("content").mapInPandas(parse, WARC_OUT_SCHEMA)
+
+
+def read_warc(spark: SparkSession, path: str) -> DataFrame:
+    """Distributed WARC scan: one task per file (the crawl-archive split
+    unit), records parsed by an Arrow-batched kernel. Returns
+    (url, warc_ts, record_type, payload)."""
+    return _parse_records(spark.read.format("binaryFile").load(path))
 
 
 def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -252,18 +256,9 @@ def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
             T.StructField("content", T.BinaryType()),
         ]
     )
-    files = spark.readStream.format("binaryFile").schema(schema).load(path)
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                rows.extend(parse_warc_bytes(bytes(content)))
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "record_type", "payload"]
-            )
-
-    return files.select("content").mapInPandas(parse, WARC_OUT_SCHEMA)
+    return _parse_records(
+        spark.readStream.format("binaryFile").schema(schema).load(path)
+    )
 
 
 def write_warc(

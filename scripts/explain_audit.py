@@ -6,6 +6,7 @@ assert the structural properties the 100 TB design depends on:
 - lexicon / dim joins are BroadcastHashJoin (never SMJ);
 - the overlap kernel (detect+categorize+resolve) reuses ONE doc-keyed exchange;
 - the disambiguation top-1 is a hash aggregate (partial + final), no sort;
+- the type attach is a broadcast join on the lexicon key, no exchange;
 - whole-stage codegen covers the relational stages;
 - the n-gram operators tokenize each text once per read of it.
 
@@ -124,7 +125,7 @@ def main() -> int:
     write_closed_redirects(_synth_mod.redirects_df(spark), _rd_dir)
     p = plan_of(
         _canon(
-            entrymod._resolved(spark, SF),
+            entrymod._kg(spark, SF)["resolved"],
             spark.read.parquet(_rd_dir),
             _synth_mod.sameas_df(spark),
         )
@@ -188,29 +189,7 @@ def main() -> int:
 
     # 12. pipeline link+overlaps: ONE doc-keyed exchange serves the top-1
     # aggregation AND the overlap kernel (its repartition(doc) is satisfied).
-    from kgspark import disambig as _disambig, overlaps as _overlaps, segment as _segment
-    _docs_pl = docs.select(
-        F.col("doc_id").cast("string").alias("url"), "text"
-    ).limit(200)
-    _segs = _segment.segment_documents(_docs_pl).withColumn(
-        "doc_tokens", _disambig.hashed_tokens(F.col("text")))
-    # spot through the lexicon artifact, as run_pipeline does
-    import tempfile as _tf
-
-    from kgspark import spot as _spot, synth as _synth
-    from kgspark.automaton import write_lexicon_artifact as _wla
-
-    _lex = _synth.lexicon_df(spark)
-    _art = _wla(_lex, _tf.mkdtemp(prefix="audit-lex-"))
-    _spots = _segment.stitch_filter(
-        _spot.spot_segments(_segs, _art, doc_col="url",
-                            keep_extra=("keep_from", "keep_to", "doc_tokens")))
-    _linked = _disambig.link_mentions(
-        _spots, _lex, _docs_pl, doc_col="url", partition_by_doc=True)
-    _resolved = _overlaps.overlap_pipeline(
-        _linked, keep=["longest", "shortest", "multiple"], doc_col="doc_id"
-    ).drop(*list(_overlaps.OVL_FLAGS))
-    p = plan_of(_resolved)
+    p = plan_of(entrymod._kg(spark, SF)["resolved"])
     sections.append(("pipeline link+overlaps (one doc-keyed exchange)", p))
     n_doc_ex = len(re.findall(r"hashpartitioning\(doc_id#\d+[L]?, \d+\)", p))
     checks.append(
@@ -219,6 +198,25 @@ def main() -> int:
     checks.append(
         ("no (doc_id, start, text) aggregation exchange remains",
          not re.search(r"hashpartitioning\(doc_id#\d+L?, start#", p), p))
+
+    # 12b. type attach: a broadcast join on the lexicon's (surface form,
+    # uri) key — no shuffle and no aggregation in front of the broadcast
+    import shutil
+
+    from kgspark.disambig import attach_types
+
+    _lex_dir = _tmpf.mkdtemp(prefix="audit-lexicon-")
+    _synth_mod.lexicon_df(spark).write.mode("overwrite").parquet(_lex_dir)
+    _lex = spark.read.parquet(_lex_dir)
+    _mentions = _lex.select(F.lit(0).alias("doc_id"), F.lit(1).alias("start"),
+                            F.col("surface_form").alias("text"),
+                            F.col("uri").alias("dbpedia_uri"))
+    p = plan_of(attach_types(_mentions, _lex))
+    shutil.rmtree(_lex_dir, ignore_errors=True)
+    sections.append(("type attach (lexicon-key broadcast join)", p))
+    checks.append(
+        ("type attach plans no exchange",
+         not re.search(r"(?<!Broadcast)Exchange", p) and "Aggregate" not in p, p))
 
     # 13. mixture sampling: pure scan-side predicate — no exchange, no UDF
     p = plan_of(entrymod.q_mixture_sample(spark, SF))

@@ -85,9 +85,10 @@ def test_boundary_rejections():
     assert ac.find_word_bounded("(spark)") == [(1, "spark")]
 
 
-def test_artifact_path_equals_broadcast(spark, tmp_path):
+def test_artifact_path_equals_flat_matcher(spark, tmp_path):
     """Spotting through the executor-built artifact automaton must equal
-    spotting through a driver-built broadcast automaton."""
+    ``FlatMatcher.find_word_bounded`` over the same forms, per document
+    (1-based starts)."""
     from kgspark import synth
     from kgspark.automaton import write_lexicon_artifact
     from kgspark.spot import spot_documents
@@ -95,13 +96,16 @@ def test_artifact_path_equals_broadcast(spark, tmp_path):
     docs = synth.synth_documents(spark, n_docs=30).select(
         F.col("url").alias("doc_id"), "text"
     )
-    forms = sorted({r[0] for r in synth.LEXICON_ROWS})
-    bc = spark.sparkContext.broadcast(FlatMatcher(forms))
+    matcher = FlatMatcher({r[0] for r in synth.LEXICON_ROWS})
+    want = sorted(
+        (r["doc_id"], s0 + 1, sf)
+        for r in docs.collect()
+        for s0, sf in matcher.find_word_bounded(r["text"])
+    )
     path = str(tmp_path / "lexforms")
     write_lexicon_artifact(synth.lexicon_df(spark), path)
-    via_bc = sorted(map(tuple, spot_documents(docs, bc, doc_col="doc_id").collect()))
     via_art = sorted(map(tuple, spot_documents(docs, path, doc_col="doc_id").collect()))
-    assert via_bc == via_art and len(via_bc) > 0
+    assert via_art == want and len(want) > 0
 
 
 def test_big_lexicon_automaton_spots_correctly(spark, tmp_path):
@@ -115,11 +119,36 @@ def test_big_lexicon_automaton_spots_correctly(spark, tmp_path):
     docs = synth.synth_documents(spark, n_docs=20).select(
         F.col("url").alias("doc_id"), "text"
     )
-    path = str(tmp_path / "biglex")
-    write_lexicon_artifact(synth.big_lexicon_df(spark, n=100_000), path)
-    big = sorted(map(tuple, spot_documents(docs, path, doc_col="doc_id").collect()))
-    small_bc = spark.sparkContext.broadcast(
-        FlatMatcher(sorted({r[0] for r in synth.LEXICON_ROWS}))
-    )
-    small = sorted(map(tuple, spot_documents(docs, small_bc, doc_col="doc_id").collect()))
+
+    def spotted(lexicon, name):
+        path = write_lexicon_artifact(lexicon, str(tmp_path / name))
+        return sorted(map(tuple, spot_documents(docs, path, doc_col="doc_id").collect()))
+
+    big = spotted(synth.big_lexicon_df(spark, n=100_000), "biglex")
+    small = spotted(synth.lexicon_df(spark), "smalllex")
     assert big == small and len(big) > 0
+
+
+def test_rewritten_artifact_is_not_served_stale(spark, tmp_path):
+    """An artifact rewritten at the same path is spotted with the new
+    forms: the per-process matcher memo must not serve the old lexicon,
+    neither in the reused python workers nor in this process."""
+    from kgspark.automaton import load_automaton_from_artifact, write_lexicon_artifact
+    from kgspark.schemas import LEXICON_SCHEMA
+    from kgspark.spot import spot_documents
+
+    text = "the spark join is a hash join"
+    docs = spark.createDataFrame([("d1", text)], ["doc_id", "text"])
+    path = str(tmp_path / "forms")
+
+    def spotted(form):
+        lexicon = spark.createDataFrame(
+            [(form, "uri:" + form, 1.0, 100, [], [], "")], LEXICON_SCHEMA)
+        write_lexicon_artifact(lexicon, path)
+        in_process = [sf for _, sf in
+                      load_automaton_from_artifact(path).find_word_bounded(text)]
+        rows = spot_documents(docs, path, doc_col="doc_id").collect()
+        return in_process, sorted(r["text"] for r in rows)
+
+    assert spotted("spark") == (["spark"], ["spark"])
+    assert spotted("join") == (["join", "join"], ["join", "join"])

@@ -108,18 +108,18 @@ def _typed_rows(df):
     )
 
 
-def test_attached_types_equal_post_hoc_attach_types(spark):
+def test_attached_types_equal_post_hoc_attach_types(spark, tmp_path):
     """On the golden corpus, the typed link output equals the narrow link
     output with ``attach_types`` applied afterwards (the pipeline's order),
     with and without the D6 ``types`` restriction."""
     from kgspark import synth
-    from kgspark.automaton import FlatMatcher
+    from kgspark.automaton import write_lexicon_artifact
     from kgspark.spot import spot_documents
 
     docs = synth.golden_documents(spark)
     glex = synth.golden_lexicon_df(spark)
-    forms = sorted({r[0] for r in synth.GOLDEN_LEXICON_ROWS})
-    spots = spot_documents(docs, spark.sparkContext.broadcast(FlatMatcher(forms)))
+    spots = spot_documents(
+        docs, write_lexicon_artifact(glex, str(tmp_path / "golden_forms")))
 
     typed = _typed_rows(link_mentions(spots, glex, docs, attach_type_cols=True))
     post_hoc = _typed_rows(attach_types(
@@ -133,3 +133,52 @@ def test_attached_types_equal_post_hoc_attach_types(spark):
                 if set(dict(r[4]).get("DBpedia") or ()) & set(wanted)]
     assert restricted == expected
     assert 0 < len(restricted) < len(post_hoc)
+    # D6 is a semi-join: without the type columns the rows stay narrow
+    narrow = link_mentions(spots, glex, docs, types=wanted, attach_type_cols=False)
+    assert narrow.columns == ["doc_id", "start", "text", "dbpedia_uri"]
+    assert sorted(r[:4] for r in restricted) == sorted(map(tuple, narrow.collect()))
+
+
+def test_types_attach_from_the_surface_form_row(spark):
+    """One uri under two surface forms with different types: each mention
+    gets the types of the lexicon row it won by, (text, uri), not some row
+    of its uri."""
+    rows = [
+        ("NYC", "uri:nyc", 1.0, 100, ["City"], ["Q515"], "ny"),
+        ("Big Apple", "uri:nyc", 1.0, 100, ["Nickname"], [], "ny"),
+    ]
+    lexicon = spark.createDataFrame(rows, LEXICON_SCHEMA)
+    linked = spark.createDataFrame(
+        [("d1", 1, "NYC", "uri:nyc"), ("d1", 9, "Big Apple", "uri:nyc")],
+        ["doc_id", "start", "text", "dbpedia_uri"],
+    )
+    got = {r["text"]: (r["DBpedia_type"], r["Wikidata_type"])
+           for r in attach_types(linked, lexicon).collect()}
+    assert got == {"NYC": ("|City|", "|Q515|"), "Big Apple": ("|Nickname|", None)}
+    docs = docs_df(spark, [("d1", "NYC is the Big Apple")])
+    spots = spots_df(spark, [("d1", 1, "NYC"), ("d1", 12, "Big Apple")])
+    kept = link_mentions(spots, lexicon, docs, types=["Nickname"])
+    assert [r["text"] for r in kept.collect()] == ["Big Apple"]
+
+
+def test_attach_types_plans_no_exchange(spark, tmp_path):
+    """Over a parquet lexicon the attach is one broadcast join on the
+    lexicon key: no shuffle and no aggregation before the broadcast."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    path = str(tmp_path / "lexicon")
+    lex(spark).write.parquet(path)
+    lexicon = spark.read.parquet(path)
+    linked = spark.createDataFrame(
+        [("d1", 1, "spark", "uri:spark_sw")],
+        ["doc_id", "start", "text", "dbpedia_uri"],
+    )
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        attach_types(linked, lexicon).explain()
+    plan = buf.getvalue()
+    assert "BroadcastHashJoin" in plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+    assert "Aggregate" not in plan, plan

@@ -64,3 +64,12 @@ def test_oracle_match(spark, duck, name):
     assert len(srows) == len(orows), f"{name}: row counts differ"
     assert sorted(c.lower() for c in sdf.columns) == sorted(c.lower() for c in ocols)
     assert table_hash(sdf.columns, srows) == table_hash(ocols, orows), f"{name}: value hash differs"
+
+
+def test_read_spread_sizes_a_file_uri(spark, tmp_path):
+    """The spread gate sizes its input through the Hadoop FileSystem API:
+    a small parquet named by a ``file://`` URI is spread over every core."""
+    path = tmp_path / "docs.parquet"
+    spark.range(100).coalesce(1).write.parquet(str(path))
+    df = entrymod._read_spread(spark, path.as_uri())
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism > 1

@@ -20,6 +20,21 @@ import sys
 import time
 
 
+def read_documents(spark, path: str, input_format: str, streaming: bool = False):
+    """The job's input documents. WARC archives — a directory scanned
+    once, or with ``streaming`` a crawl drop directory read as an unbounded
+    source — become (url, warc_ts, text) in one Python operator
+    (``warc_documents``); a parquet table is read as it is."""
+    if input_format == "warc":
+        from kgspark.warc import BINARY_FILE_SCHEMA, warc_documents
+
+        reader = spark.readStream if streaming else spark.read
+        return warc_documents(
+            reader.format("binaryFile").schema(BINARY_FILE_SCHEMA).load(path)
+        )
+    return spark.read.parquet(path)
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
@@ -37,7 +52,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--input-format", choices=["parquet", "warc"],
                     default="parquet",
                     help="'warc' ingests WARC/1.0 archives natively "
-                         "(response records -> url/warc_ts/html)")
+                         "(response records -> url/warc_ts/text)")
     ap.add_argument("--no-html", action="store_true",
                     help="input already has extracted text")
     ap.add_argument("--redirects-preclosed", action="store_true",
@@ -53,6 +68,8 @@ def main(argv: list[str] | None = None) -> int:
                          "only archives that landed since the last one "
                          "and APPENDS their triples to --output")
     args = ap.parse_args(argv)
+    if args.streaming and args.input_format != "warc":
+        ap.error("--streaming requires --input-format warc")
 
     from pyspark.sql import SparkSession
 
@@ -65,34 +82,14 @@ def main(argv: list[str] | None = None) -> int:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
 
-    def responses(records):
-        """WARC records -> (url, warc_ts, html) documents. http_responses
-        strips the HTTP envelope real crawls store in response payloads
-        (status line/headers/chunked/charset); bare-HTML payloads (our
-        own writer's default) pass through untouched."""
-        from pyspark.sql import functions as F
-
-        from kgspark.warc import http_responses
-
-        return http_responses(
-            records.filter(F.col("record_type") == "response")
-        ).select(
-            "url",
-            F.col("warc_ts").cast("timestamp").alias("warc_ts"),
-            "html",
-        )
-
-    if args.input_format == "warc":
-        from kgspark.warc import read_warc
-
-        docs = responses(read_warc(spark, args.input))
-    else:
-        docs = spark.read.parquet(args.input)
+    docs = read_documents(spark, args.input, args.input_format, args.streaming)
     # Schema-driven defaults so the bare invocation works on any documents
     # table: inputs without an `html` column are already extracted text, and
     # the id column falls back to `doc_id` when the default `url` is absent.
-    # Explicit --no-html / --doc-col always win.
-    use_html = not args.no_html
+    # Explicit --no-html / --doc-col always win. WARC documents arrive as
+    # extracted text (warc_documents), so their extract stage only
+    # checkpoints them.
+    use_html = not args.no_html and args.input_format != "warc"
     if use_html and "html" not in docs.columns:
         print(f"kg_construct: input has no 'html' column "
               f"({docs.columns}); assuming extracted text", file=sys.stderr)
@@ -131,15 +128,11 @@ def main(argv: list[str] | None = None) -> int:
         # offsets, so re-invoking the job after new archives land
         # processes ONLY those — resumability at the ingest level, on top
         # of the per-stage lineage inside a batch.
-        if args.input_format != "warc":
-            ap.error("--streaming requires --input-format warc")
         import dataclasses
 
         from kgspark.dedup import release_checkpoint
         from kgspark.pipeline import release_pipeline_caches
-        from kgspark.warc import read_warc_stream
 
-        stream = responses(read_warc_stream(spark, args.input))
         batches: list[dict] = []
 
         def process_batch(batch_df, batch_id: int) -> None:
@@ -161,7 +154,7 @@ def main(argv: list[str] | None = None) -> int:
 
         ckpt_root = args.checkpoint or args.output
         q = (
-            stream.writeStream.foreachBatch(process_batch)
+            docs.writeStream.foreachBatch(process_batch)
             .option("checkpointLocation", f"{ckpt_root}/_stream_offsets")
             .trigger(availableNow=True)
             .start()

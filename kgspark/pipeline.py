@@ -1,7 +1,9 @@
 """End-to-end KG-construction pipeline (SURVEY.md §7 stage order).
 
 documents(url, warc_ts, html, text, lang)
-  -> extract (html -> text, byte-identical invariant)
+  -> extract (html -> text, byte-identical invariant; with use_html=False
+     the documents already carry text — warc.warc_documents extracts it
+     inside the WARC record walk — and the stage only checkpoints them)
   -> segment (overlap windows + precomputed stitch bounds; skew breaking)
   -> spot (vectorized flat matcher, batch pandas UDF)
   -> stitch (pure filter)
@@ -27,6 +29,7 @@ from __future__ import annotations
 import tempfile
 from dataclasses import dataclass, field
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kgspark import canonicalize as canon
@@ -61,8 +64,9 @@ class PipelineConfig:
     lexicon_artifact: str | None = None  # where the surface-form artifact is
                                          # written (must be executor-reachable
                                          # — shared FS on a real cluster);
-                                         # default: <checkpoint_root>/_lexicon
-                                         # or a local tempdir
+                                         # default: <checkpoint_root>/_lexicon_forms
+                                         # or, on a local master, a dir the
+                                         # SparkContext deletes on stop
     redirects_preclosed: bool = False    # True when the redirects dim is the
                                          # output of write_closed_redirects
                                          # (the production setup — closure is
@@ -93,7 +97,11 @@ def run_pipeline(
     elif cfg.checkpoint_root:
         artifact = cfg.checkpoint_root.rstrip("/") + "/_lexicon_forms"
     elif spark.sparkContext.master.startswith("local"):
-        artifact = tempfile.mkdtemp(prefix="kgspark-lexicon-")
+        # under the context's SparkFiles root, which the context deletes
+        # when it stops: lazy frames can read the artifact until then
+        artifact = tempfile.mkdtemp(
+            prefix="kgspark-lexicon-", dir=SparkFiles.getRootDirectory()
+        )
     else:
         # A driver-local tempdir is not executor-reachable on a real
         # cluster — spotting workers could never read the artifact.

@@ -10,17 +10,23 @@ terminated, blank line) followed by ``Content-Length`` payload bytes and
 per record (stdlib gzip reads concatenated members; the writer emits
 them with ``compress=True``). Response payloads carrying a raw HTTP
 exchange — status line, headers, chunked transfer coding, Content-Type
-charset — are unwrapped to text by ``http_responses``.
+charset — are unwrapped by ``parse_http_response``.
 
 Scale shape: WARC records are variable-length, so the SPLIT UNIT is the
 file, not a byte range — exactly how crawl archives are laid out (CC
 ships ~1 GB files; one task per file). ``spark.read.format("binaryFile")``
-lists the files into partitions and a ``mapInPandas`` kernel walks each
-file's records; no driver-side parsing, no collect. The writer is the
-inverse: one WARC file per partition via ``foreachPartition``-free
-``mapInPandas`` (each task writes its own file — the idempotent
-task-output pattern; at 10^12 docs swap the local filesystem for the
-Hadoop FileSystem API as in ``kgspark/lineage.py``).
+lists the files into partitions; no driver-side parsing, no collect.
+``warc_documents`` is the ingest the KG job runs: ONE ``mapInPandas``
+kernel walks each file's records, keeps the response records, unwraps
+their HTTP envelope and extracts the page text, so the whole
+bytes-to-text path crosses into Python once. ``read_warc``,
+``http_responses`` and ``extract.extract_text`` expose the same pure
+functions one operator at a time (records, envelopes, text), for callers
+that want the intermediate columns. The writer is the inverse: one WARC
+file per partition via ``foreachPartition``-free ``mapInPandas`` (each
+task writes its own file — the idempotent task-output pattern; at 10^12
+docs swap the local filesystem for the Hadoop FileSystem API as in
+``kgspark/lineage.py``).
 """
 
 from __future__ import annotations
@@ -32,12 +38,23 @@ import re
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+from kgspark.extract import extract_text_from_html
 
 CRLF = b"\r\n"
 WARC_OUT_SCHEMA = "url string, warc_ts string, record_type string, payload binary"
 HTTP_OUT_SCHEMA = (
     "url string, warc_ts string, http_status int, content_type string, html string"
+)
+# binaryFile's own schema; a streaming source needs it pinned explicitly
+BINARY_FILE_SCHEMA = T.StructType(
+    [
+        T.StructField("path", T.StringType()),
+        T.StructField("modificationTime", T.TimestampType()),
+        T.StructField("length", T.LongType()),
+        T.StructField("content", T.BinaryType()),
+    ]
 )
 
 
@@ -178,8 +195,9 @@ def http_responses(records: DataFrame, payload_col: str = "payload") -> DataFram
     """WARC response records -> (url, warc_ts, http_status, content_type,
     html): the payload's HTTP envelope parsed off (status/headers/
     dechunk/charset), bare-HTML payloads passed through. Arrow-batched
-    kernel, one narrow pass — at crawl scale this runs fused with the
-    file scan."""
+    kernel, one narrow pass of its own: a second Python operator after
+    the record walk. The KG job reads ``warc_documents`` instead, which
+    runs this unwrap inside the record walk."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -244,21 +262,41 @@ def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
     only files that appeared since the last checkpointed offset, which is
     exactly how a live crawl lands (CC publishes ~1 GB .warc.gz files
     continuously). Compose with ``http_responses`` and the extract/spot
-    stages for an end-to-end streaming KG ingest; the binaryFile source
-    needs its schema pinned explicitly in streaming mode."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("modificationTime", T.TimestampType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
+    stages for an end-to-end streaming KG ingest (``warc_documents`` over
+    the same source does the first two in one kernel); the binaryFile
+    source needs its schema pinned explicitly in streaming mode."""
     return _parse_records(
-        spark.readStream.format("binaryFile").schema(schema).load(path)
+        spark.readStream.format("binaryFile").schema(BINARY_FILE_SCHEMA).load(path)
     )
+
+
+def warc_documents(files: DataFrame) -> DataFrame:
+    """binaryFile rows (batch or streaming) -> documents
+    (url, warc_ts timestamp, text), in one Python operator.
+
+    Per file the kernel composes the pure functions the one-operator-each
+    path runs: ``parse_warc_bytes``, the response-record filter,
+    ``parse_http_response`` and ``extract.extract_text_from_html``. The
+    rows equal ``extract_text(http_responses(read_warc(..).filter(
+    record_type == "response"))).drop("html")`` with its timestamp cast,
+    but the bytes cross into Python once, not three times: one Python
+    worker per task instead of three."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for content in pdf["content"]:
+                for rec in parse_warc_bytes(bytes(content)):
+                    if rec["record_type"] == "response":
+                        text = parse_http_response(rec["payload"])["text"]
+                        rows.append(
+                            (rec["url"], rec["warc_ts"], extract_text_from_html(text))
+                        )
+            yield pd.DataFrame(rows, columns=["url", "warc_ts", "text"])
+
+    return files.select("content").mapInPandas(
+        kernel, "url string, warc_ts string, text string"
+    ).select("url", F.col("warc_ts").cast("timestamp").alias("warc_ts"), "text")
 
 
 def write_warc(

@@ -8,7 +8,8 @@ assert the structural properties the 100 TB design depends on:
 - the disambiguation top-1 is a hash aggregate (partial + final), no sort;
 - the type attach is a broadcast join on the lexicon key, no exchange;
 - whole-stage codegen covers the relational stages;
-- the n-gram operators tokenize each text once per read of it.
+- the n-gram operators tokenize each text once per read of it;
+- the KG job's WARC ingest crosses into Python once.
 
 Writes BENCH/PLANS.md. Exits non-zero if an expectation is violated.
 """
@@ -36,6 +37,8 @@ def plan_of(df) -> str:
 TOKENIZE = re.compile(r"\b(?:split|lower)\((?:lower\()?text#\d+")
 # a leaf that reads the text: a scan, or an exchange reused from another branch
 TEXT_READ = re.compile(r"^.*(?:Scan|ReusedExchange)[^\n]*\btext#\d+", re.M)
+# an operator that runs Python in its own worker
+PYTHON_OPERATOR = re.compile(r"\b(?:MapInPandas|ArrowEvalPython|MapInArrow|BatchEvalPython)\b")
 
 
 def executed_plan(df) -> str:
@@ -285,6 +288,35 @@ def main() -> int:
         checks.append(
             (f"{name} tokenizes the text once per read ({n_tok} for {n_read})",
              n_read >= 1 and n_tok == n_read, p))
+
+    # 17. WARC ingest: the documents kg_construct reads from WARC archives,
+    # through run_pipeline's extract stage, plan one Python operator (the
+    # record walk, HTTP unwrap and extraction are one kernel)
+    from jobs.kg_construct import read_documents
+    from kgspark.pipeline import PipelineConfig, run_pipeline
+    from kgspark.warc import write_warc
+
+    _warc_dir = _tmpf.mkdtemp(prefix="audit-warc-")
+    write_warc(
+        _synth_mod.synth_documents(spark, n_docs=8).select(
+            "url", F.date_format("warc_ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("warc_ts"),
+            F.col("html").alias("payload"),
+        ),
+        _warc_dir,
+    )
+    p = executed_plan(run_pipeline(
+        spark, read_documents(spark, _warc_dir, "warc"),
+        _synth_mod.lexicon_df(spark), spark.read.parquet(_rd_dir),
+        _synth_mod.sameas_df(spark),
+        PipelineConfig(use_html=False, redirects_preclosed=True),
+    )["documents"])
+    for _d in (_warc_dir, _rd_dir):
+        shutil.rmtree(_d, ignore_errors=True)
+    sections.append(("WARC ingest through the extract stage (executed plan)", p))
+    n_py = len(PYTHON_OPERATOR.findall(p))
+    checks.append(
+        (f"WARC ingest crosses into Python once (found {n_py} Python operators)",
+         n_py == 1, p))
 
     ok = True
     lines = ["# Physical-plan audit (generated by scripts/explain_audit.py)\n"]

@@ -179,10 +179,69 @@ def test_kg_construct_from_warc_archive(spark, tmp_path, capsys):
         "--input-format", "warc", "--checkpoint", str(tmp_path / "ckpt"),
     ])
     assert rc == 0
-    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    captured = capsys.readouterr()
+    summary = json.loads(captured.out.strip().splitlines()[-1])
     triples = spark.read.parquet(out_dir)
     assert summary["triples"] == triples.count() > 0
     assert set(triples.columns) >= {"subj", "obj"}
+    # WARC documents arrive extracted: no schema-sniffing fallback
+    assert "assuming extracted text" not in captured.err
+
+
+PYTHON_OPERATOR = r"\b(?:MapInPandas|ArrowEvalPython|MapInArrow|BatchEvalPython)\b"
+
+
+def test_kg_construct_warc_extract_stage_crosses_into_python_once(
+    spark, tmp_path, monkeypatch
+):
+    """The documents kg_construct builds for --input-format warc, taken
+    through run_pipeline's extract stage with the job's own config, plan
+    exactly one Python operator: the record walk, HTTP unwrap and
+    extraction run in one kernel."""
+    import dataclasses
+    import re
+
+    from pyspark.sql import functions as F
+
+    import kgspark.pipeline
+    from jobs.kg_construct import main
+    from kgspark import synth
+    from kgspark.warc import write_warc
+
+    docs = synth.synth_documents(spark, n_docs=6).select(
+        F.col("url"),
+        F.date_format("warc_ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("warc_ts"),
+        F.col("html").alias("payload"),
+    ).repartition(2)
+    warc_dir = str(tmp_path / "crawl")
+    write_warc(docs, warc_dir)
+
+    class Built(Exception):
+        pass
+
+    calls = []
+    real_run_pipeline = kgspark.pipeline.run_pipeline
+
+    def capture(*args, **kwargs):
+        calls.append((args, kwargs))
+        raise Built
+
+    monkeypatch.setattr(kgspark.pipeline, "run_pipeline", capture)
+    with pytest.raises(Built):
+        main(["--input", warc_dir, "--output", str(tmp_path / "triples"),
+              "--input-format", "warc"])
+    [(args, kwargs)] = calls
+    *inputs, cfg = args
+    # the redirect closure is not the extract stage's concern
+    out = real_run_pipeline(
+        *inputs, dataclasses.replace(cfg, redirects_preclosed=True), **kwargs
+    )
+    extracted = out["documents"]
+    assert extracted.count() == 6
+    plan = extracted._jdf.queryExecution().executedPlan().toString()
+    ops = re.findall(PYTHON_OPERATOR, plan.split("== Initial Plan ==")[0])
+    assert ops == ["MapInPandas"], plan
+    assert cfg.use_html is False
 
 
 def test_kg_construct_streaming_incremental(spark, tmp_path):

@@ -202,6 +202,23 @@ def test_lexicon_artifact_reused_not_rewritten(spark, tmp_path):
     } == mtimes
 
 
+def test_lazy_run_leaves_no_lexicon_tempdir(spark):
+    """Without checkpoint_root or lexicon_artifact, a lazy run on a local
+    master writes the surface-form artifact under the context's SparkFiles
+    root, which the context deletes when it stops: nothing new lands in
+    the temp dir, and the lazy frames still read the artifact."""
+    import glob
+    import tempfile
+
+    def left():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "kgspark-lexicon-*")))
+
+    before = left()
+    with _run(spark, synth.golden_documents(spark)) as out:
+        assert out["triples"].count() > 0
+    assert left() - before == set()
+
+
 def test_release_pipeline_caches_empties_cache_manager(spark):
     """Benchmark contract: after release_pipeline_caches, no pipeline cache
     survives to be plan-matched by a later pass. The pipeline persists

@@ -202,3 +202,92 @@ def test_streaming_warc_incremental_ingest(spark, tmp_path):
     # incremental proof: the first batch's rows were NOT reprocessed —
     # the sink holds exactly 3 rows, not 5
     assert spark.read.parquet(sink).count() == 3
+
+
+def _documents_fixture(drop):
+    """A crawl drop covering every payload shape the ingest meets: one
+    ``.warc`` and one ``.warc.gz`` (one gzip member per record)."""
+    from kgspark.warc import build_http_response
+
+    page = "<html><head><title>t</title></head><body><p>caf\xe9 {}</p></body></html>"
+    plain = [
+        # HTTP/1.1 envelope, utf-8 charset in the header
+        ("http://a/envelope", build_http_response(page.format(1).encode())),
+        # chunked transfer coding
+        ("http://a/chunked",
+         b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
+         b"9\r\n<p>hello \r\n9\r\nworld</p>\r\n0\r\n\r\n"),
+        # a non-utf-8 charset in the Content-Type header
+        ("http://a/latin1", build_http_response(
+            page.format(3).encode("latin-1"), "text/html; charset=ISO-8859-1")),
+        # the charset only in a <meta charset> of the markup
+        ("http://a/meta",
+         b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+         + '<meta charset="ISO-8859-1"><p>ol\xe9 4</p>'.encode("latin-1")),
+        # bare HTML, the writer's default payload
+        ("http://a/bare", page.format(5).encode()),
+        # an empty payload
+        ("http://a/empty", b""),
+    ]
+    ts = "2026-01-01T00:00:{:02d}Z"
+    blob = b"".join(
+        build_warc_record(u, ts.format(i), p) for i, (u, p) in enumerate(plain)
+    )
+    # a request record: not a document
+    blob += build_warc_record(
+        "http://a/envelope", ts.format(0),
+        b"GET / HTTP/1.1\r\nHost: a\r\n\r\n", record_type="request",
+    )
+    (drop / "plain.warc").write_bytes(blob)
+    gz = [(f"http://b/{i}", build_http_response(page.format(10 + i).encode()))
+          for i in range(3)]
+    (drop / "members.warc.gz").write_bytes(b"".join(
+        gzip.compress(build_warc_record(u, ts.format(i), p))
+        for i, (u, p) in enumerate(gz)
+    ))
+    return [u for u, _ in plain + gz]
+
+
+def test_warc_documents_equals_the_operator_chain(spark, tmp_path):
+    """warc_documents (one Python operator) gives the rows of the
+    record walk -> response filter -> HTTP unwrap -> extraction chain,
+    over a batch scan and over an availableNow stream of the same drop."""
+    from kgspark.extract import extract_text
+    from kgspark.warc import BINARY_FILE_SCHEMA, http_responses, warc_documents
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    urls = _documents_fixture(drop)
+
+    chain = extract_text(http_responses(
+        read_warc(spark, str(drop)).filter(F.col("record_type") == "response")
+    )).drop("html").select(
+        "url", F.col("warc_ts").cast("timestamp").alias("warc_ts"), "text"
+    )
+    want = sorted(tuple(r) for r in chain.collect())
+    assert sorted(r[0] for r in want) == sorted(urls)  # the request is gone
+    texts = dict((r[0], r[2]) for r in want)
+    assert texts["http://a/latin1"] == "caf\xe9 3"
+    assert texts["http://a/meta"] == "ol\xe9 4"
+    assert texts["http://a/chunked"] == "hello world"
+    assert texts["http://a/empty"] == ""
+
+    batch = warc_documents(spark.read.format("binaryFile").load(str(drop)))
+    assert batch.columns == ["url", "warc_ts", "text"]
+    assert dict(batch.dtypes)["warc_ts"] == "timestamp"
+    assert sorted(tuple(r) for r in batch.collect()) == want
+
+    sink = str(tmp_path / "sink")
+    q = (
+        warc_documents(
+            spark.readStream.format("binaryFile")
+            .schema(BINARY_FILE_SCHEMA).load(str(drop))
+        )
+        .writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    streamed = spark.read.parquet(sink).select("url", "warc_ts", "text")
+    assert sorted(tuple(r) for r in streamed.collect()) == want
